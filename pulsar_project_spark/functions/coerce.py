@@ -55,10 +55,3 @@ def to_boolean(col: Column | str) -> Column:
         .otherwise(F.lit(None).cast("boolean"))
     )
 
-
-def number_coerce(col: Column | str) -> Column:
-    """Schema type "number": int if integral else float (memory.py:223-230).
-    Emitted as DOUBLE (the int case is an integral double) so one column
-    carries both."""
-    c = F.col(col) if isinstance(col, str) else col
-    return c.try_cast("double")

@@ -1,47 +1,22 @@
-"""JSON / structured-content extraction (reference ``utils.py:134-163``,
-``client.py:194-214``).
+"""JSON / structured-content extraction (reference ``utils.py:134-163``).
 
 The reference scans responses for ``` fenced blocks, trims to the first
-``{``/``[``, strips leading language tags, and parses leniently with
-json5; the structured agent response is then projected to
-``think/text/mem_op/tool/finished``.
+``{``/``[`` and strips leading language tags before parsing.
 
-Engine mapping (SURVEY.md §7.6): the strict path — fence scan via
-``regexp_extract``, parse via ``from_json``/``get_json_object`` — is
-pure JVM expression work and oracle-checkable. Full json5 leniency
-(unquoted keys, trailing commas) is a small Arrow-batched Pandas UDF
-behind a flag, used only when strict parsing fails.
+Engine mapping (SURVEY.md §7.6): the fence scan is one
+``regexp_extract`` — pure JVM expression work and oracle-checkable;
+callers parse the payload with ``from_json``/``get_json_object``
+(lenient JSON lives in ``functions/lenient_json.py``).
 """
 
 from __future__ import annotations
 
-import json
-import re
-
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 # fenced block: ``` optional-language-tag ... ``` — capture the payload
 # from the first '{' or '[' (utils.py:141-152 trims to the JSON start).
 FENCE_PATTERN = r"```(?:json|html|css|python|javascript|xml)?\s*([\{\[].*?[\}\]])\s*```"
-
-# Structured agent response contract (client.py:122-136, README.md:202-211).
-RESPONSE_SCHEMA = T.StructType([
-    T.StructField("think", T.StringType()),
-    T.StructField("text", T.StringType()),
-    T.StructField("mem_op", T.StructType([
-        T.StructField("name", T.StringType()),
-        T.StructField("args", T.MapType(T.StringType(), T.StringType())),
-    ])),
-    T.StructField("tool", T.StructType([
-        T.StructField("name", T.StringType()),
-        T.StructField("args", T.MapType(T.StringType(), T.StringType())),
-    ])),
-    T.StructField("finished", T.StringType()),  # coerced to bool downstream
-])
 
 
 def extract_fenced_json(col: Column | str) -> Column:
@@ -49,53 +24,3 @@ def extract_fenced_json(col: Column | str) -> Column:
     of split_content_and_json, utils.py:134-163)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.regexp_extract(c, FENCE_PATTERN, 1)
-
-
-def parse_response(col: Column | str) -> Column:
-    """Structured-output parse (client.py:194-214): JSON text → typed
-    struct. ``from_json`` yields NULL fields on mismatch — the engine's
-    analog of the reference's fall-through-to-"not found" dispatch."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.from_json(c, RESPONSE_SCHEMA)
-
-
-_JSON5_READY = None
-
-
-def _json5_available() -> bool:
-    global _JSON5_READY
-    if _JSON5_READY is None:
-        try:
-            import json5  # noqa: F401
-            _JSON5_READY = True
-        except ImportError:
-            _JSON5_READY = False
-    return _JSON5_READY
-
-
-@pandas_udf(T.StringType())
-def lenient_json_normalize(texts: pd.Series) -> pd.Series:
-    """Lenient (json5-style) parse → canonical strict JSON string, NULL on
-    failure. Arrow-batched; ONLY for the slow path where strict
-    ``from_json`` returned NULL (gate with a filter so the UDF sees the
-    residue, not the corpus). Falls back to strict json when the json5
-    package is absent (it is not bundled in this environment)."""
-    if _json5_available():
-        import json5 as _parser
-    else:
-        _parser = json
-
-    def norm(s):
-        if s is None:
-            return None
-        try:
-            return json.dumps(_parser.loads(s), sort_keys=True, separators=(",", ":"))
-        except Exception:
-            # strip trailing commas — the most common json5-ism — then retry strict
-            try:
-                cleaned = re.sub(r",\s*([\]}])", r"\1", s)
-                return json.dumps(json.loads(cleaned), sort_keys=True, separators=(",", ":"))
-            except Exception:
-                return None
-
-    return texts.map(norm)

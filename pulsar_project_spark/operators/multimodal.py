@@ -108,18 +108,6 @@ def as_assets(docs: DataFrame, id_col: str = "doc_id",
     )
 
 
-def _real_decode(content: bytes, fmt: str):  # pragma: no cover - codec stub
-    """Real codec hook. The container ships no PIL/libav — gate it."""
-    try:
-        from PIL import Image  # noqa: F401
-    except ImportError as exc:
-        raise NotImplementedError(
-            "image/audio codecs unavailable in this environment; "
-            "deterministic fake decode is the supported path"
-        ) from exc
-    raise NotImplementedError("real decode wired when codecs are present")
-
-
 def decode_image_meta(assets: DataFrame) -> DataFrame:
     """Arrow-batched decode pass: one ``mapInPandas`` over (id, content,
     meta). Fake-decodes dimensions from the payload deterministically;

@@ -25,10 +25,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _order(cols: list[Column]) -> list[Column]:
-    return list(cols)
-
-
 def keep_last_n(df: DataFrame, partition_by: list[str], order_by: list[Column],
                 n: int) -> DataFrame:
     """Keep the newest N rows per group (``logs[-max_logs:]`` et al).

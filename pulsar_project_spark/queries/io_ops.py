@@ -1012,7 +1012,7 @@ def q_tx_partition_evolution_census(spark: SparkSession,
     import shutil
 
     from pulsar_project_spark.sources.txlog import (
-        tx_append_clustered,
+        tx_append,
         tx_init,
         tx_read_pruned,
         tx_snapshot,
@@ -1028,8 +1028,8 @@ def q_tx_partition_evolution_census(spark: SparkSession,
     gen2 = ev.filter(
         (F.pmod(F.col("event_id"), F.lit(2)) == 1)
         | F.col("event_id").isNull())
-    tx_append_clustered(gen1, path, ["day"], n_files=4)
-    tx_append_clustered(gen2, path, ["event_type", "day"], n_files=4)
+    tx_append(gen1, path, 4, cluster_by=["day"])
+    tx_append(gen2, path, 4, cluster_by=["event_type", "day"])
     if not tx_snapshot(path)["files"]:
         return spark.createDataFrame([], _TX_EMPTY_SCHEMA).select(
             "event_type", "n_events", "total_cents")
@@ -1101,7 +1101,7 @@ def q_tx_delete_dv_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from pulsar_project_spark.sources.txlog import (
-        tx_append_clustered,
+        tx_append,
         tx_delete_range_dv,
         tx_init,
         tx_read,
@@ -1124,7 +1124,7 @@ def q_tx_delete_dv_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.round(F.col("value") * 100).cast("bigint").alias("value_cents"),
     )
-    tx_append_clustered(ev, path, ["user_id"], n_files=4)
+    tx_append(ev, path, 4, cluster_by=["user_id"])
     if not tx_snapshot(path)["files"]:
         return spark.createDataFrame([], empty_schema)
     tx_delete_range_dv(spark, path, "user_id", 100, 300)
@@ -1539,7 +1539,7 @@ def q_tx_typed_change_feed_census(spark: SparkSession,
     import shutil
 
     from pulsar_project_spark.sources.txlog import (
-        tx_append_clustered,
+        tx_append,
         tx_delete_range_dv,
         tx_init,
         tx_merge_upsert,
@@ -1567,7 +1567,7 @@ def q_tx_typed_change_feed_census(spark: SparkSession,
     # rewrite only overlapping files and the beyond-range shadow merge
     # rewrite NOTHING (pure insert) — the targeted-DML pattern at scale,
     # and it halves the census build cost (BENCH_NOTES round-8 cont.)
-    tx_append_clustered(per_user, path, ["user_id"], n_files=4)      # v1
+    tx_append(per_user, path, 4, cluster_by=["user_id"])             # v1
     tx_merge_upsert(                                                 # v2
         spark, path,
         in_range.select("user_id",
@@ -1613,7 +1613,7 @@ def q_tx_bloom_point_lookup_census(spark: SparkSession,
     query min/max bounds CANNOT serve: the per-user table is HASH-
     scattered across 8 files (every file spans the whole user_id range,
     so range pruning keeps everything), and the per-file blooms written
-    by ``tx_append_bloomed`` prove definite absence instead — the
+    by ``tx_append(bloom_col=...)`` prove definite absence instead — the
     5-needle probe opens only the maybe-files (actual skipping pinned
     in tests/test_txlog.py; this census pins CORRECTNESS: the bloom is
     no-false-negative by construction, so the lookup result must equal
@@ -1627,7 +1627,7 @@ def q_tx_bloom_point_lookup_census(spark: SparkSession,
     import shutil
 
     from pulsar_project_spark.sources.txlog import (
-        tx_append_bloomed,
+        tx_append,
         tx_init,
         tx_read_bloom_point,
         tx_snapshot,
@@ -1649,8 +1649,8 @@ def q_tx_bloom_point_lookup_census(spark: SparkSession,
              .cast("bigint").alias("cents"))
     )
     # hash-scatter: every file spans the full id range on purpose
-    tx_append_bloomed(per_user.repartition(8, "user_id"), path,
-                      "user_id", n_files=None)
+    tx_append(per_user.repartition(8, "user_id"), path,
+              bloom_col="user_id")
     if not tx_snapshot(path)["files"]:
         return spark.createDataFrame([], empty_schema)
     try:
@@ -1833,7 +1833,7 @@ def q_tx_pruned_read_renamed_census(spark: SparkSession,
     import shutil
 
     from pulsar_project_spark.sources.txlog import (
-        tx_append_clustered,
+        tx_append,
         tx_init,
         tx_read_pruned,
         tx_rename_column,
@@ -1859,10 +1859,10 @@ def q_tx_pruned_read_renamed_census(spark: SparkSession,
         F.col("user_id").alias("user_key"), "event_type",
         cents.alias("value_cents"))
     if not gen1.isEmpty():
-        tx_append_clustered(gen1, path, ["uid"], n_files=4)
+        tx_append(gen1, path, 4, cluster_by=["uid"])
         tx_rename_column(path, "uid", "user_key")
     if not gen2.isEmpty():
-        tx_append_clustered(gen2, path, ["user_key"], n_files=4)
+        tx_append(gen2, path, 4, cluster_by=["user_key"])
     if not tx_snapshot(path)["files"]:
         return spark.createDataFrame([], empty_schema)
     try:
@@ -2019,7 +2019,7 @@ def q_tx_merge_conditional_census(spark: SparkSession,
     import shutil
 
     from pulsar_project_spark.sources.txlog import (
-        tx_append_clustered,
+        tx_append,
         tx_init,
         tx_merge,
         tx_read,
@@ -2047,7 +2047,7 @@ def q_tx_merge_conditional_census(spark: SparkSession,
            .agg(F.count(F.lit(1)).alias("cnt"),
                 F.sum(cents).cast("bigint").alias("cents")))
     if not tgt.isEmpty():
-        tx_append_clustered(tgt, path, ["user_id"], n_files=4)
+        tx_append(tgt, path, 4, cluster_by=["user_id"])
     if src.isEmpty() and not tx_snapshot(path)["files"]:
         return spark.createDataFrame([], empty_schema)
     if not src.isEmpty():
@@ -2208,7 +2208,7 @@ def q_tx_row_tracking_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pulsar_project_spark.sources.tables import load_table
     from pulsar_project_spark.sources.txlog import (
-        tx_append_tracked,
+        tx_append,
         tx_compact,
         tx_delete_range_dv,
         tx_init,
@@ -2226,14 +2226,14 @@ def q_tx_row_tracking_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _rt_path("txlog_row_tracking")
     if os.path.exists(path):
         shutil.rmtree(path)
-    tx_init(path)
+    tx_init(path, row_tracking=True)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey")
     for r in (0, 1, 2):
         batch = orders.filter(
             F.pmod(F.col("o_orderkey"), F.lit(3)) == r
         ).repartition(1).sortWithinPartitions("o_orderkey")
-        tx_append_tracked(batch, path)
+        tx_append(batch, path)
     if not tx_snapshot(path)["files"]:
         return spark.createDataFrame([], empty_schema)
     tx_delete_range_dv(spark, path, "o_custkey", 2, 400)
@@ -2318,7 +2318,7 @@ def q_tx_keyless_cdc_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pulsar_project_spark.sources.tables import load_table
     from pulsar_project_spark.sources.txlog import (
-        tx_append_tracked,
+        tx_append,
         tx_changes_by_rid,
         tx_delete_range_dv,
         tx_init,
@@ -2336,7 +2336,7 @@ def q_tx_keyless_cdc_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _rt_path("txlog_keyless_cdc")
     if os.path.exists(path):
         shutil.rmtree(path)
-    tx_init(path)
+    tx_init(path, row_tracking=True)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey",
         F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"))
@@ -2344,7 +2344,7 @@ def q_tx_keyless_cdc_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         batch = orders.filter(
             F.pmod(F.col("o_orderkey"), F.lit(3)) == r
         ).repartition(1).sortWithinPartitions("o_orderkey")
-        tx_append_tracked(batch, path, stat_cols=["o_custkey"])
+        tx_append(batch, path, stat_cols=["o_custkey"])
     if not tx_snapshot(path)["files"]:
         return spark.createDataFrame([], empty_schema)
     v_from = tx_latest_version(path)
@@ -2353,7 +2353,7 @@ def q_tx_keyless_cdc_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     b2 = orders.filter(
         F.pmod(F.col("o_orderkey"), F.lit(3)) == 2
     ).repartition(1).sortWithinPartitions("o_orderkey")
-    tx_append_tracked(b2, path, stat_cols=["o_custkey"])
+    tx_append(b2, path, stat_cols=["o_custkey"])
     ch = tx_changes_by_rid(spark, path, v_from)
     return ch.groupBy(
         F.col("_change_type").alias("change_type")
@@ -2410,7 +2410,7 @@ def q_tx_generated_column_census(spark: SparkSession,
     import shutil
 
     from pulsar_project_spark.sources.txlog import (
-        tx_append_clustered,
+        tx_append,
         tx_init,
         tx_read_pruned,
         tx_set_generated,
@@ -2432,7 +2432,7 @@ def q_tx_generated_column_census(spark: SparkSession,
         "event_type", "ts_us",
         F.round(F.col("value") * 100).cast("bigint").alias("value_cents"),
     )
-    tx_append_clustered(ev, path, ["day"], n_files=4)
+    tx_append(ev, path, 4, cluster_by=["day"])
     if not tx_snapshot(path)["files"]:
         return spark.createDataFrame([], empty_schema)
     try:
@@ -2503,7 +2503,7 @@ def q_tx_generated_dml_census(spark: SparkSession,
     import shutil
 
     from pulsar_project_spark.sources.txlog import (
-        tx_append_clustered,
+        tx_append,
         tx_init,
         tx_read_pruned,
         tx_set_generated,
@@ -2526,7 +2526,7 @@ def q_tx_generated_dml_census(spark: SparkSession,
         "event_type", "ts_us",
         F.round(F.col("value") * 100).cast("bigint").alias("value_cents"),
     )
-    tx_append_clustered(ev, path, ["day"], n_files=4)
+    tx_append(ev, path, 4, cluster_by=["day"])
     if not tx_snapshot(path)["files"]:
         return spark.createDataFrame([], empty_schema)
     tx_update(spark, path, "ts_us", _GEN_MOVE_LO, _GEN_MOVE_HI,
@@ -2603,7 +2603,7 @@ def q_tx_datasource_read_census(spark: SparkSession,
     from pulsar_project_spark.sources.tables import load_table
     from pulsar_project_spark.sources.tx_batch import TxTableDataSource
     from pulsar_project_spark.sources.txlog import (
-        tx_append_tracked,
+        tx_append,
         tx_compact,
         tx_delete_range_dv,
         tx_init,
@@ -2619,14 +2619,14 @@ def q_tx_datasource_read_census(spark: SparkSession,
     path = _rt_path("txlog_datasource")
     if os.path.exists(path):
         shutil.rmtree(path)
-    tx_init(path)
+    tx_init(path, row_tracking=True)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey")
     for r in (0, 1, 2):
         batch = orders.filter(
             F.pmod(F.col("o_orderkey"), F.lit(3)) == r
         ).repartition(1).sortWithinPartitions("o_orderkey")
-        tx_append_tracked(batch, path, stat_cols=["o_custkey"])
+        tx_append(batch, path, stat_cols=["o_custkey"])
     if not tx_snapshot(path)["files"]:
         return spark.createDataFrame([], empty_schema)
     tx_delete_range_dv(spark, path, "o_custkey", 2, 400)
@@ -2678,8 +2678,8 @@ def q_tx_datasource_write_census(spark: SparkSession,
     (``df.write.format("tx_table").mode("append")``): a two-phase
     commit where executor tasks stage Arrow batches and the driver
     publishes one manifest CAS — exercised here against a CONSTRAINED,
-    row-TRACKED table. Batch 0 lands via ``tx_append_tracked``
-    (pinning the table as tracked); batch 1 lands through the standard
+    row-TRACKED table (created with ``tx_init(path, row_tracking=True)``).
+    Batch 0 lands via ``tx_append``; batch 1 lands through the standard
     writer, whose commit must validate the CHECK constraint (DuckDB
     evaluates the portable predicate — the data-source worker has no
     SparkSession) and mint positional row ids continuing from the hwm.
@@ -2699,7 +2699,7 @@ def q_tx_datasource_write_census(spark: SparkSession,
     from pulsar_project_spark.sources.tables import load_table
     from pulsar_project_spark.sources.tx_batch import TxTableDataSource
     from pulsar_project_spark.sources.txlog import (
-        tx_append_tracked,
+        tx_append,
         tx_init,
         tx_set_constraint,
         tx_snapshot,
@@ -2714,13 +2714,13 @@ def q_tx_datasource_write_census(spark: SparkSession,
     path = _rt_path("txlog_ds_write")
     if os.path.exists(path):
         shutil.rmtree(path)
-    tx_init(path)
+    tx_init(path, row_tracking=True)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey")
     b0 = orders.filter(
         F.pmod(F.col("o_orderkey"), F.lit(2)) == 0
     ).repartition(1).sortWithinPartitions("o_orderkey")
-    tx_append_tracked(b0, path, stat_cols=["o_custkey"])
+    tx_append(b0, path, stat_cols=["o_custkey"])
     if not tx_snapshot(path)["files"]:
         return spark.createDataFrame([], empty_schema)
     tx_set_constraint(spark, path, "custkey_domain",

@@ -6,7 +6,7 @@ certified through one of five sound mechanisms:
 
 1. exactly-once tx landing (``streaming_tx_exactly_once_census``'s
    recipe; topic frequencies / windowed counts / keep-last state) —
-   each micro-batch lands via txn-keyed ``tx_append_txn``, the
+   each micro-batch lands via txn-keyed ``tx_append``, the
    restart and forced-replay gates must commit nothing, and the
    landed census hashes against the original parquet;
 2. batch-split-independent folds adopting their batch twins' oracles
@@ -64,7 +64,7 @@ def q_streaming_topic_frequencies(spark: SparkSession, sf_dir: str) -> DataFrame
     VERDICT r10 order #1): update-mode agg keyed (topic, day) with a
     watermark (reference topic upsert + frequency++, memory.py:315-344),
     every micro-batch's running totals landed in a TRANSACTIONAL table
-    via txn-keyed ``tx_append_txn`` before the last-wins rollup is read
+    via txn-keyed ``tx_append`` before the last-wins rollup is read
     — so the per-topic census hashes against DuckDB over the original
     parquet, and a lost batch, doubled batch, or watermark drop breaks
     the driver gate. The restart + forced-replay certification arms run
@@ -587,7 +587,7 @@ def q_streaming_tx_change_feed(spark: SparkSession,
     round-8 continuation): a genuine streaming run over the custom
     Python DataSource tailing the tx log's manifest chain, folding
     per-commit weighted changes into a STATE tx table via exactly-once
-    ``tx_append_txn`` (restart certification under ``gate=True`` in
+    ``tx_append(txn=...)`` (restart certification under ``gate=True`` in
     tests/test_streaming.py — round 12). The final
     census carries the SAME oracle as the batch twin
     ``tx_change_feed_census`` — sound because stream offsets are
@@ -635,7 +635,7 @@ def q_streaming_tx_mv_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     COW UPDATE) is tailed by the ``tx_change_feed`` streaming source —
     now column-mapping-aware, presenting every generation under the
     FINAL logical schema — and folded per micro-batch into a maintained
-    aggregate tx table via exactly-once ``tx_append_txn`` (restart
+    aggregate tx table via exactly-once ``tx_append(txn=...)`` (restart
     certification under ``gate=True`` in tests/test_streaming.py —
     round 12).
     The final view hash-matches the oracle's direct census of the live

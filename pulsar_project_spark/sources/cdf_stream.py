@@ -9,7 +9,7 @@ manifest VERSIONS, so Structured Streaming's own offset log gives the
 consumer exactly-once version ranges — a replayed micro-batch re-reads
 exactly the same (start, end] commit window and produces byte-identical
 change rows (manifests and data files are immutable), which is what
-makes a downstream idempotent fold (``tx_append_txn`` keyed by batch
+makes a downstream idempotent fold (``tx_append(txn=...)`` keyed by batch
 id) exactly-once end to end.
 
 Each micro-batch carries the WEIGHTED change rows of the commits in its

@@ -7,24 +7,17 @@ Message schema follows the public pulsar-spark connector
 
     key BINARY, value BINARY, topic STRING, publish_ts_us BIGINT, seq BIGINT
 
-Two backends:
-
-* **Directory-backed topic log** (always available): each topic is an
-  append-only parquet directory; producers append files, consumers run
-  file-source Structured Streaming over it. This gives real streaming
-  semantics — monotone offsets (files), append-only delivery, resume
-  from checkpoint — with zero external infrastructure, and is the
-  test/CI backend.
-* **Native Pulsar connector** (gated): when the
-  ``org.apache.pulsar:pulsar-spark`` package is on the classpath,
-  ``read_pulsar_stream`` wires ``spark.readStream.format("pulsar")``
-  with ``service.url``/``topic`` options. This container ships no
-  connector jar and no broker, so the call raises with instructions
-  rather than pretending.
+Backend: a **directory-backed topic log** — each topic is an
+append-only parquet directory; producers append files, consumers run
+file-source Structured Streaming over it. This gives real streaming
+semantics — monotone offsets (files), append-only delivery, resume from
+checkpoint — with zero external infrastructure. A native Pulsar broker
+(``spark.readStream.format("pulsar")`` with the pulsar-spark connector
+package) would swap in by changing only the reader factory; none is
+wired here.
 
 At 100 TB/day the directory backend IS the production pattern for
-object-store landing zones (files arrive, file source streams them);
-the broker backend swaps in by changing only the reader factory.
+object-store landing zones (files arrive, file source streams them).
 """
 
 from __future__ import annotations
@@ -161,25 +154,6 @@ def decode_event_messages(msgs: DataFrame) -> DataFrame:
         F.from_json(F.decode(F.col("value"), "utf-8"), payload).alias("e"),
         "publish_ts_us", "seq",
     ).select("e.*", "publish_ts_us", "seq")
-
-
-def read_pulsar_stream(spark: SparkSession, service_url: str,
-                       topic: str) -> DataFrame:  # pragma: no cover - gated
-    """Native Pulsar connector path. Requires the pulsar-spark package
-    (``--packages io.streamnative.connectors:pulsar-spark-connector``)
-    and a reachable broker — neither ships in this container."""
-    try:
-        return (
-            spark.readStream.format("pulsar")
-            .option("service.url", service_url)
-            .option("topic", topic)
-            .load()
-        )
-    except Exception as exc:
-        raise NotImplementedError(
-            "pulsar connector jar/broker unavailable; use DirectoryQueue "
-            "(same message schema, same streaming semantics)"
-        ) from exc
 
 
 def roundtrip_pipeline(spark: SparkSession, sf_dir: str,

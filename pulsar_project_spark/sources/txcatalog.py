@@ -153,8 +153,8 @@ def _commit_branch(table: str, parent: int, files: list[str],
             # the true lineage rides in the txn field for audit —
             # lineage consumers read the catalog, and the manifest's
             # file list is complete in itself
-            v = _commit(table, base + attempt, files, op=op,
-                        txn={"lineage": parent})
+            v = _commit(table, tx_snapshot(table, base + attempt), files,
+                        op=op, txn={"lineage": parent})
         except TxConflict:
             continue
         return v

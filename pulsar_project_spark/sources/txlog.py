@@ -36,6 +36,40 @@ On an object store without hard links the same protocol runs with a
 conditional PUT (If-None-Match) of the manifest object; every other
 step is already rename-free.
 
+Metadata rule: a manifest carries TABLE metadata (constraints, rename
+chain, drop list, widening types, generated columns, schema union,
+``row_hwm``) and PER-FILE maps (bounds/blooms ``stats``, deletion
+vectors ``dvs``, row-id bases ``rids``). Every commit inherits the
+parent's table metadata and the parent's per-file entries for the
+files it keeps, and states only what it changes (``_commit``).
+
+ONE append (``tx_append``) serves every write shape through one CAS
+loop (``_append_commit``, shared with the ``tx_table`` batch writer),
+with orthogonal options:
+
+- ``txn=(app, batch)`` — exactly-once: the writer-transaction id rides
+  inside the manifest, so the replay check and the commit are one CAS
+  (the Delta ``txn`` pattern a streaming foreachBatch sink needs — a
+  replayed micro-batch becomes a no-op, never a duplicate).
+- ``cluster_by`` — range clustering with per-file bounds: PARTITION-
+  SPEC EVOLUTION, since each generation of files may be clustered by
+  a different spec and the pruned read tests bounds per file; re-
+  speccing a 100 TB table costs nothing for existing data.
+- ``bloom_col`` — a per-file Bloom index (``__bloom__<col>`` in the
+  stats): min/max cannot skip a high-cardinality id scattered across
+  every file, a bloom proves definite absence (``tx_read_bloom_point``).
+- ``stat_cols`` — per-file min/max bounds for driver-side pruning.
+
+ROW TRACKING is table state, set at creation
+(``tx_init(table, row_tracking=True)``, Delta's table-property model):
+every append to a tracked table mints table-unique ids at zero stored
+bytes (``rids[file] = base``, id = base + row position, bases drawn
+from ``row_hwm`` inside the CAS so racing appends get disjoint
+ranges), and every rewrite MATERIALIZES them as a physical ``_rid``
+column, so ids are rewrite-stable and never reused. Row identity is
+what lets change feeds, incremental MERGE sources and audit diffs say
+"the SAME row, updated" across compactions (``tx_changes_by_rid``).
+
 Reference scope: the reference persists whole-state snapshots and
 task files (memory.py:63-90, task.py:406-470) with no concurrent-
 writer story — this is the beyond-reference scale path for the same
@@ -68,12 +102,22 @@ def _manifest_path(table: str, version: int) -> str:
     return os.path.join(table, _MANIFEST_DIR, f"v{version:08d}.json")
 
 
-def tx_init(table: str) -> None:
-    """Create an empty table (version 0, no files). Idempotent."""
+def tx_init(table: str, row_tracking: bool = False) -> None:
+    """Create an empty table (version 0, no files). Idempotent.
+
+    ``row_tracking=True`` creates the table TRACKED (the Delta
+    table-property model): its manifest carries ``row_hwm``, and from
+    then on every append mints row ids (see the module docstring).
+    Tracking is chosen at creation; asking for it on an existing
+    untracked table raises."""
     os.makedirs(os.path.join(table, _MANIFEST_DIR), exist_ok=True)
     os.makedirs(os.path.join(table, _STAGING_DIR), exist_ok=True)
     if tx_latest_version(table) is None:
-        _commit(table, expected_parent=None, files=[], op="init")
+        _commit(table, None, [], op="init",
+                row_hwm=0 if row_tracking else None)
+    elif row_tracking and not _tracked(tx_snapshot(table)):
+        raise ValueError(
+            f"{table}: row tracking is set when the table is created")
 
 
 def tx_latest_version(table: str) -> int | None:
@@ -98,115 +142,74 @@ def tx_snapshot(table: str, version: int | None = None) -> dict:
         return json.load(fh)
 
 
-def _commit(table: str, expected_parent: int | None,
-            files: list[str], op: str,
-            txn: dict | None = None,
-            stats: dict | None = None,
-            dvs: dict | None = None,
-            constraints: dict | None = None,
-            renames: list | None = None,
-            drops: list | None = None,
-            types: dict | None = None,
-            add_schema: dict | None = None,
-            rids: dict | None = None,
-            row_hwm: int | None = None,
-            generated: dict | None = None) -> int:
-    """Atomically commit ``files`` as version expected_parent+1.
+def _tracked(snap: dict) -> bool:
+    """Row tracking is TABLE state: on iff the manifest carries row_hwm."""
+    return "row_hwm" in snap
+
+
+# TABLE metadata: every commit inherits these from its parent unless it
+# passes a replacement (the schema union only ever grows, see _commit).
+_TABLE_META = ("constraints", "renames", "drops", "types", "generated",
+               "row_hwm")
+# PER-FILE maps: a commit keeps the parent's entries for the files it
+# still lists and adds entries for the files it brings in.
+_FILE_MAPS = ("stats", "dvs", "rids")
+
+
+def _commit(table: str, parent: dict | None, files: list[str], op: str,
+            *, txn: dict | None = None, schema: dict | None = None,
+            **changes) -> int:
+    """Atomically commit ``files`` as the version after ``parent`` (the
+    snapshot the caller planned against; None only for ``tx_init``).
 
     Write the manifest fully (fsync'd) to a dot-tmp name, then
     ``os.link`` it to its final version name — the one atomic step.
-    Raises ``TxConflict`` if that version already exists. ``txn``
-    (writer-transaction id, see ``tx_append_txn``) rides inside the
-    manifest so idempotency-check and commit share the CAS. ``dvs``
-    maps data-file name → deletion-vector file name (merge-on-read
-    DELETE, see ``tx_delete_range_dv``). Every manifest also carries a
-    MONOTONIC commit timestamp ``ts_us`` (max of wall clock and
-    parent's ts_us + 1, so a clock step backwards can never produce an
-    out-of-order label) — the resolution key for AS OF TIMESTAMP time
-    travel (``tx_version_as_of_timestamp``)."""
-    version = 0 if expected_parent is None else expected_parent + 1
-    parent_ts = 0
-    parent_constraints: dict = {}
-    parent_renames: list = []
-    parent_drops: list = []
-    parent_types: dict = {}
-    parent_schema: dict = {}
-    parent_rids: dict = {}
-    parent_hwm: int | None = None
-    parent_generated: dict = {}
-    if expected_parent is not None:
-        try:
-            with open(_manifest_path(table, expected_parent)) as fh:
-                pm = json.load(fh)
-            parent_ts = pm.get("ts_us", 0)
-            # CHECK constraints are TABLE metadata, not commit payload:
-            # every commit carries them forward unless the commit
-            # explicitly replaces the set (tx_set/drop_constraint)
-            parent_constraints = pm.get("constraints", {})
-            parent_renames = pm.get("renames", [])
-            parent_drops = pm.get("drops", [])
-            parent_types = pm.get("types", {})
-            parent_schema = pm.get("schema", {})
-            # row tracking: base-id map and high-water-mark are TABLE
-            # metadata like constraints — carried forward verbatim
-            # unless the commit explicitly replaces them. Stale entries
-            # for files a commit removed are harmless (readers iterate
-            # the manifest's live file list, never the rids keys).
-            parent_rids = pm.get("rids", {})
-            parent_hwm = pm.get("row_hwm")
-            parent_generated = pm.get("generated", {})
-        except FileNotFoundError:
-            # vacuum dropped the parent manifest; monotonicity then
-            # rests on the wall clock alone (documented in tx_vacuum)
-            parent_ts = 0
+    Raises ``TxConflict`` if that version already exists.
+
+    One rule carries metadata forward: the new manifest inherits every
+    ``_TABLE_META`` key of ``parent`` unless ``changes`` replaces it;
+    its ``schema`` is the MONOTONE UNION of the parent's and this
+    commit's staged columns (name → Spark simpleString — the read
+    planner builds a widened explicit schema from metadata alone, zero
+    footer round trips; stale names retired by renames/drops are
+    harmless); each ``_FILE_MAPS`` map keeps the parent's entries for
+    files still listed, then takes ``changes``' entries for this
+    commit's files (``dvs`` maps data file → deletion-vector file,
+    ``rids`` data file → row-id base or None when materialized). ``txn``
+    (writer-transaction id, see ``tx_append``) rides inside the
+    manifest so idempotency-check and commit share the CAS. Every
+    manifest carries a MONOTONIC commit timestamp ``ts_us`` (max of
+    wall clock and parent's ts_us + 1, so a clock step backwards can
+    never produce an out-of-order label) — the resolution key for AS
+    OF TIMESTAMP time travel (``tx_version_as_of_timestamp``)."""
+    parent = parent or {}
+    version = parent["version"] + 1 if parent else 0
     manifest = {
         "version": version,
-        "parent": expected_parent,
+        "parent": parent.get("version"),
         "op": op,
-        "ts_us": max(parent_ts + 1, time.time_ns() // 1_000),
+        "ts_us": max(parent.get("ts_us", 0) + 1, time.time_ns() // 1_000),
         "files": sorted(files),
     }
-    effective_constraints = (constraints if constraints is not None
-                             else parent_constraints)
-    if effective_constraints:
-        manifest["constraints"] = effective_constraints
-    effective_renames = renames if renames is not None else parent_renames
-    if effective_renames:
-        manifest["renames"] = effective_renames
-    effective_drops = drops if drops is not None else parent_drops
-    if effective_drops:
-        manifest["drops"] = effective_drops
-    effective_types = types if types is not None else parent_types
-    if effective_types:
-        manifest["types"] = effective_types
-    # the manifest records the MONOTONE UNION of every physical column
-    # ever staged (name → Spark simpleString): the read planner can then
-    # build a widened explicit schema from metadata alone, with zero
-    # per-file footer round trips — at 100 TB the same planning-time
-    # property the stats bounds give pruning. Stale names (retired by
-    # compaction through renames/drops) are harmless: reads null-fill
-    # then coalesce/project them away.
-    effective_schema = dict(parent_schema)
-    if add_schema:
-        effective_schema.update(add_schema)
-    if effective_schema:
-        manifest["schema"] = effective_schema
-    effective_rids = rids if rids is not None else parent_rids
-    if effective_rids:
-        manifest["rids"] = effective_rids
-    effective_hwm = row_hwm if row_hwm is not None else parent_hwm
-    if effective_hwm is not None:
-        manifest["row_hwm"] = effective_hwm
-    effective_generated = (generated if generated is not None
-                           else parent_generated)
-    if effective_generated:
-        manifest["generated"] = effective_generated
+    for key in _TABLE_META:
+        value = changes.pop(key, None)
+        if value is None:
+            value = parent.get(key)
+        if value not in (None, {}, []):  # row_hwm 0 is kept
+            manifest[key] = value
+    union = {**parent.get("schema", {}), **(schema or {})}
+    if union:
+        manifest["schema"] = union
+    live = set(files)
+    for key in _FILE_MAPS:
+        entries = {n: e for n, e in parent.get(key, {}).items() if n in live}
+        entries.update(changes.pop(key, None) or {})
+        if entries:
+            manifest[key] = entries
+    if changes:
+        raise TypeError(f"_commit: unknown manifest keys {sorted(changes)}")
     if txn is not None:
         manifest["txn"] = txn
-    if stats is not None:
-        manifest["stats"] = stats
-    if dvs:
-        manifest["dvs"] = dvs
     mdir = os.path.join(table, _MANIFEST_DIR)
     tmp = os.path.join(mdir, f".v{version:08d}.{uuid.uuid4().hex}.tmp")
     with open(tmp, "w") as fh:
@@ -263,44 +266,111 @@ def _stage_dataframe(df: DataFrame, table: str,
     return names
 
 
-def tx_append(df: DataFrame, table: str, n_files: int | None = None,
+def tx_append(df: DataFrame, table: str, n_files: int | None = None, *,
+              shuffle: bool = False, txn: tuple[str, int] | None = None,
+              cluster_by: list[str] | None = None,
+              bloom_col: str | None = None,
+              stat_cols: list[str] | None = None,
               max_retries: int = 8) -> int:
     """Append ``df`` as new immutable files; returns the new version.
-    Stage once, then CAS-commit with rebase on conflict (an append
-    composes with any concurrent commit — the file list is re-read and
-    the new files re-added on top). CHECK constraints are enforced on
-    the incoming rows before a byte is staged; generated columns are
-    computed/validated first (``_apply_generated``)."""
-    gens = tx_generated(table)
-    df = _apply_generated(df, table, gens)
-    validated = tx_constraints(table)
+
+    Generated columns are computed/validated and CHECK constraints
+    enforced on the incoming rows before a byte is staged; then the
+    rows are staged once and CAS-committed with rebase on conflict
+    (``_append_commit``). Options, all orthogonal:
+
+    - ``n_files`` / ``shuffle``: output file count, sized by
+      ``coalesce`` or, with ``shuffle``, ``repartition`` (see
+      ``_stage_dataframe``);
+    - ``txn=(app, batch)``: idempotent writer-transaction key — a
+      replayed ``(app, batch)`` returns the version that committed it
+      before staging anything, so a replay neither duplicates rows nor
+      burns id range;
+    - ``cluster_by``: range-cluster the rows on these columns into
+      ``n_files`` files (Spark's shuffle partition count when unset),
+      sorted within files, recording their per-file bounds;
+    - ``bloom_col``: record a per-file Bloom filter (plus bounds) on
+      this int/string column;
+    - ``stat_cols``: record per-file min/max bounds of these columns.
+
+    On a row-tracked table (``tx_init(..., row_tracking=True)``) the
+    new files get fresh id ranges from the table's ``row_hwm``."""
+    if txn is not None:
+        done = tx_txn_version(table, *txn)
+        if done is not None:
+            return done
+    snap = tx_snapshot(table)
+    gens = snap.get("generated", {})
+    df = _apply_generated(df, table, gens)  # may ADD a cluster column
+    validated = snap.get("constraints", {})
     _enforce_constraints(df, table, validated)
-    new_files = _stage_dataframe(df, table, n_files)
+    if cluster_by:
+        out = df.repartitionByRange(*([n_files] if n_files else []),
+                                    *cluster_by)
+        new_files = _stage_dataframe(out.sortWithinPartitions(*cluster_by),
+                                     table)
+    else:
+        new_files = _stage_dataframe(df, table, n_files, shuffle=shuffle)
+    bounded = sorted({*(cluster_by or ()), *(stat_cols or ()),
+                      *([bloom_col] if bloom_col else [])})
+    fresh = _collect_file_stats(table, new_files, bounded) if bounded else {}
+    if bloom_col:
+        for n, bloom in _build_blooms(table, new_files, bloom_col).items():
+            fresh[n][_BLOOM_PREFIX + bloom_col] = bloom
+    op = ("append-clustered" if cluster_by
+          else "append-bloomed" if bloom_col else "append")
+    return _append_commit(
+        table, new_files, op, gens=gens, validated=validated,
+        recheck=lambda cs: _enforce_constraints(df, table, cs),
+        schema=_df_schema_map(df), stats=fresh, txn=txn,
+        max_retries=max_retries)
+
+
+def _append_commit(table: str, new_files: list[str], op: str, *,
+                   gens: dict, validated: dict, recheck, schema: dict,
+                   stats: dict | None = None, counts: dict | None = None,
+                   txn: tuple[str, int] | None = None,
+                   max_retries: int = 8) -> int:
+    """THE append commit loop — every append path (``tx_append``, the
+    ``tx_table`` batch writer) ends here. Staged ``new_files`` are
+    rebased onto the latest snapshot and CAS-committed; an append
+    composes with any concurrent commit, so a lost race just retries.
+
+    Per attempt: a ``txn`` already committed (a concurrent replay won)
+    returns that version, our staged files left as vacuum-able orphans;
+    a generator that landed mid-flight raises (the staged files were
+    not written under it and cannot rebase — the caller retries whole);
+    constraints that landed since ``validated`` are handed to
+    ``recheck`` (the ADVICE r8 TOCTOU rule); on a tracked table the new
+    files get id bases from THIS snapshot's ``row_hwm``, so racing
+    appends get disjoint ranges. ``counts`` (rows per new file) is read
+    from the footers only when the table is tracked."""
     for _ in range(max_retries):
+        if txn is not None:
+            done = tx_txn_version(table, *txn)
+            if done is not None:
+                return done
         snap = tx_snapshot(table)
         if snap.get("generated", {}) != gens:
-            # a generator landed mid-flight: the staged files were not
-            # written under it and cannot rebase — caller retries whole
             raise TxConflict(
                 f"{table}: generated-column set changed during append")
-        # a constraint committed between our validation and a conflict
-        # retry must still bind this write (ADVICE r8 TOCTOU): re-check
-        # whenever the snapshot's set differs from the one we validated
         cs = snap.get("constraints", {})
-        if cs != validated:
-            _enforce_constraints(df, table, cs)
-            validated = cs
+        delta = {n: p for n, p in cs.items() if validated.get(n) != p}
+        if delta:
+            recheck(delta)
+        validated = cs
+        rids, hwm = {}, None
+        if _tracked(snap):
+            if counts is None:
+                counts = {n: _parquet_num_rows(os.path.join(table, n))
+                          for n in new_files}
+            rids, hwm = _fresh_ids(snap, new_files, counts)
         try:
-            # carry existing per-file bounds forward (ADVICE r7: a plain
-            # append must not erase the manifest-stats machinery —
-            # the new files simply have no recorded bounds, which the
-            # pruned read already treats as conservatively-kept)
             return _commit(
-                table, snap["version"], snap["files"] + new_files,
-                op="append",
-                stats=(_merged_stats(snap, snap["files"], {})
-                       if snap.get("stats") else None),
-                dvs=snap.get("dvs"), add_schema=_df_schema_map(df))
+                table, snap, snap["files"] + new_files, op,
+                txn=None if txn is None else {"app": txn[0],
+                                              "batch": txn[1]},
+                schema=schema, stats=stats, rids=rids, row_hwm=hwm)
         except TxConflict:
             continue
     raise TxConflict(f"append lost {max_retries} CAS races in {table}")
@@ -443,73 +513,20 @@ def tx_compact(spark: SparkSession, table: str, target_bytes: int,
         replaced: set[str] = set()
         produced: list[str] = []
         staged_schema: dict = {}
-        # row-tracked tables MATERIALIZE ids on rewrite: the bucket is
-        # read with ``_rid`` resolved (base + position, DVs applied) and
-        # staged with the id as a physical column — after this commit
-        # the ids are data, immune to the positional shifts the applied
-        # deletion vectors just caused (Delta row tracking's rule)
-        tracked = bool(snap.get("rids"))
         for bucket in merge_buckets:
             # masked read: compacting a DV'd file APPLIES the deletion
             # vector and drops it — DV compaction, the job that turns
             # merge-on-read debt back into clean files
-            src = (_read_tracked_files(spark, table, snap, bucket)
-                   if tracked
-                   else _read_files_masked(spark, table, snap, bucket))
+            src = _read_rewrite_source(spark, table, snap, bucket)
             staged_schema.update(_df_schema_map(src))
             produced += _stage_dataframe(src, table, n_files=1)
             replaced.update(bucket)
         keep = [f for f in snap["files"] if f not in replaced]
-        # carry kept files' bounds; recompute bounds for the rewritten
-        # outputs over the same column set (ADVICE r7: compaction must
-        # not erase the stats machinery the pruned read depends on).
-        # Bloom indexes are REBUILT for the outputs too — compaction is
-        # the re-index opportunity (Delta OPTIMIZE does the same):
-        # rewrites elsewhere (UPDATE/DELETE/MERGE) drop the bloom and
-        # read conservatively, but a compaction that dropped it would
-        # erode skipping forever on exactly the files everything
-        # eventually flows into.
-        prev_stats = snap.get("stats", {})
-        # stats keys are PHYSICAL (as-written) names, but compacted
-        # files are staged from the LOGICAL schema — resolve through
-        # the rename chain and skip dropped columns, or the rebuild
-        # asks pyarrow for a column the new files don't carry
-        # (ADVICE r8 medium: OPTIMIZE permanently failed on any
-        # bloomed table after RENAME/DROP COLUMN)
-        chain = snap.get("renames", [])
-        dropped = set(snap.get("drops", []))
-        stat_cols = sorted({
-            lc for s in prev_stats.values() for c in s
-            if not c.startswith(_BLOOM_PREFIX)
-            for lc in (_resolve_to_logical(c, chain),)
-            if lc not in dropped})
-        bloom_cols = sorted({
-            lc for s in prev_stats.values() for c in s
-            if c.startswith(_BLOOM_PREFIX)
-            for lc in (_resolve_to_logical(c[len(_BLOOM_PREFIX):], chain),)
-            if lc not in dropped})
-        stats = None
-        if stat_cols or bloom_cols:
-            fresh = (_collect_file_stats(table, produced, stat_cols)
-                     if stat_cols else {n: {} for n in produced})
-            for col in bloom_cols:
-                blooms = _build_blooms(table, produced, col)
-                for n in produced:
-                    fresh.setdefault(n, {})[_BLOOM_PREFIX + col] = blooms[n]
-            stats = _merged_stats(snap, keep, fresh)
-        keep_dvs = {n: d for n, d in snap.get("dvs", {}).items()
-                    if n in keep}
-        new_rids = None
-        if tracked:
-            new_rids = {n: b for n, b in snap["rids"].items() if n in keep}
-            for n in produced:
-                new_rids[n] = None  # ids are materialized in the file
         try:
-            return _commit(table, snap["version"], keep + produced,
-                           op="compact", stats=stats,
-                           dvs=keep_dvs or None,
-                           add_schema=staged_schema,
-                           rids=new_rids)
+            return _commit(table, snap, keep + produced, op="compact",
+                           schema=staged_schema,
+                           stats=_rebuilt_stats(table, snap, produced),
+                           rids=_rewrite_ids(snap, produced))
         except TxConflict:
             continue  # somebody committed: re-plan against their files
     raise TxConflict(f"compaction lost {max_retries} CAS races in {table}")
@@ -551,7 +568,7 @@ def tx_vacuum(table: str, retention_seconds: float = 86400.0) -> int:
       exactly like data files;
     - the (app, batch) writer-transaction ids of every manifest being
       dropped are folded into the ``txns.json`` sidecar FIRST (fsync +
-      atomic replace), so ``tx_append_txn`` idempotency — the
+      atomic replace), so ``tx_append(txn=...)`` idempotency — the
       exactly-once guarantee of the streaming sink — survives log
       cleanup. Vacuum itself must run as a single maintenance process
       per table (two concurrent vacuums may race the sidecar update).
@@ -640,9 +657,7 @@ def tx_optimize_zorder(spark: SparkSession, table: str, col_a: str,
             return snap["version"]
         # row-tracked tables: the rewrite MATERIALIZES ids (same rule
         # as compaction) — the _rid column rides through the Z-shuffle
-        tracked = bool(snap.get("rids"))
-        df = (_read_tracked_files(spark, table, snap, snap["files"])
-              if tracked else tx_read(spark, table, snap["version"]))
+        df = _read_rewrite_source(spark, table, snap, snap["files"])
         bounds = df.agg(
             F.min(col_a).alias("__amin"), F.max(col_a).alias("__amax"),
             F.min(col_b).alias("__bmin"), F.max(col_b).alias("__bmax"),
@@ -657,31 +672,14 @@ def tx_optimize_zorder(spark: SparkSession, table: str, col_a: str,
             .drop("__z", "__amin", "__amax", "__bmin", "__bmax")
         )
         produced = _stage_dataframe(arranged, table)
-        stats = (_collect_file_stats(table, produced, [col_a, col_b])
-                 if record_stats else None)
         # OPTIMIZE rebuilds bloom indexes like compaction does — the
-        # whole-table rewrite would otherwise erase every bloom at once.
-        # Bloom keys are physical names: resolve through the rename
-        # chain and skip dropped columns (the rewritten files carry the
-        # logical schema — ADVICE r8 medium)
-        chain = snap.get("renames", [])
-        dropped = set(snap.get("drops", []))
-        bloom_cols = sorted({
-            lc for s in snap.get("stats", {}).values() for c in s
-            if c.startswith(_BLOOM_PREFIX)
-            for lc in (_resolve_to_logical(c[len(_BLOOM_PREFIX):], chain),)
-            if lc not in dropped})
-        if bloom_cols and stats is not None:
-            for col in bloom_cols:
-                blooms = _build_blooms(table, produced, col)
-                for n in produced:
-                    stats.setdefault(n, {})[_BLOOM_PREFIX + col] = blooms[n]
+        # whole-table rewrite would otherwise erase every bloom at once
+        stats = (_rebuilt_stats(table, snap, produced, [col_a, col_b])
+                 if record_stats else {})
         try:
-            return _commit(table, snap["version"], produced,
-                           op="optimize-zorder", stats=stats,
-                           add_schema=_df_schema_map(df),
-                           rids=({n: None for n in produced}
-                                 if tracked else None))
+            return _commit(table, snap, produced, op="optimize-zorder",
+                           schema=_df_schema_map(df), stats=stats,
+                           rids=_rewrite_ids(snap, produced))
         except TxConflict:
             continue  # staged files orphaned; vacuum reclaims them
     raise TxConflict(f"optimize lost {max_retries} CAS races in {table}")
@@ -707,56 +705,6 @@ def tx_txn_version(table: str, app: str, batch: int) -> int | None:
         if txn and txn.get("app") == app and txn.get("batch") == batch:
             return m["version"]
     return None
-
-
-def tx_append_txn(df: DataFrame, table: str, app: str, batch: int,
-                  n_files: int | None = None, max_retries: int = 8,
-                  shuffle: bool = False) -> int:
-    """IDEMPOTENT append keyed by writer-transaction id ``(app,
-    batch)`` — the Delta `txn` pattern that makes a streaming
-    foreachBatch sink exactly-once: Structured Streaming replays a
-    failed micro-batch with the SAME batchId, and a replayed commit
-    must become a no-op, never a duplicate. The txn id travels INSIDE
-    the manifest, so the dedup check and the commit are one atomic
-    CAS — there is no window where a replay can double-append.
-    Generated columns are computed/validated exactly like every other
-    append path (ADVICE r9: an exactly-once sink must not be the one
-    door through which rows contradicting a declared generator can
-    enter and poison derived pruning)."""
-    done = tx_txn_version(table, app, batch)
-    if done is not None:
-        return done
-    gens = tx_generated(table)
-    df = _apply_generated(df, table, gens)
-    validated = tx_constraints(table)
-    _enforce_constraints(df, table, validated)
-    new_files = _stage_dataframe(df, table, n_files, shuffle=shuffle)
-    for _ in range(max_retries):
-        done = tx_txn_version(table, app, batch)
-        if done is not None:
-            return done  # concurrent replay won; our staged files are
-            # unreferenced orphans, reclaimed by vacuum
-        snap = tx_snapshot(table)
-        if snap.get("generated", {}) != gens:
-            # a generator landed mid-flight: the staged files were not
-            # written under it and cannot rebase — caller retries whole
-            raise TxConflict(
-                f"{table}: generated-column set changed during append")
-        cs = snap.get("constraints", {})
-        if cs != validated:  # constraint landed mid-retry (TOCTOU)
-            _enforce_constraints(df, table, cs)
-            validated = cs
-        try:
-            return _commit(table, snap["version"],
-                           snap["files"] + new_files, op="append",
-                           txn={"app": app, "batch": batch},
-                           stats=(_merged_stats(snap, snap["files"], {})
-                                  if snap.get("stats") else None),
-                           dvs=snap.get("dvs"),
-                           add_schema=_df_schema_map(df))
-        except TxConflict:
-            continue
-    raise TxConflict(f"txn append lost {max_retries} CAS races in {table}")
 
 
 def _stat_value(v):
@@ -825,13 +773,105 @@ def _collect_file_stats(table: str, names: list[str],
     return out
 
 
-def _merged_stats(snap: dict, files: list[str], fresh: dict) -> dict:
-    """Stats for the NEW manifest: carry forward the previous
-    manifest's entries for kept files, add the fresh files' entries."""
-    prev = snap.get("stats", {})
-    keep = {n: prev[n] for n in files if n in prev}
-    keep.update(fresh)
-    return keep
+def _rebuilt_stats(table: str, snap: dict, produced: list[str],
+                   stat_cols: list[str] | None = None) -> dict:
+    """Per-file stats for the OUTPUTS of a layout rewrite (compaction,
+    OPTIMIZE, REORG): bounds over ``stat_cols`` (default: every column
+    the snapshot already bounds) plus every Bloom index the snapshot
+    carries, rebuilt on the new files (ADVICE r7: a rewrite must not
+    erase the stats machinery the pruned read depends on; compaction is
+    the re-index opportunity Delta OPTIMIZE also takes — DML rewrites
+    drop blooms and read conservatively, but a compaction that dropped
+    them would erode skipping on exactly the files everything
+    eventually flows into). Stats keys are PHYSICAL names while the
+    outputs are staged from the LOGICAL schema, so keys resolve through
+    the rename chain and dropped columns are skipped (ADVICE r8 medium:
+    OPTIMIZE failed on any bloomed table after RENAME/DROP COLUMN)."""
+    chain = snap.get("renames", [])
+    dropped = set(snap.get("drops", []))
+    keys = {c for s in snap.get("stats", {}).values() for c in s}
+
+    def logical(cs):
+        return sorted({lc for c in cs
+                       for lc in (_resolve_to_logical(c, chain),)
+                       if lc not in dropped})
+    if stat_cols is None:
+        stat_cols = logical(c for c in keys
+                            if not c.startswith(_BLOOM_PREFIX))
+    bloom_cols = logical(c[len(_BLOOM_PREFIX):] for c in keys
+                         if c.startswith(_BLOOM_PREFIX))
+    if not (stat_cols or bloom_cols):
+        return {}
+    fresh = (_collect_file_stats(table, produced, stat_cols)
+             if stat_cols else {n: {} for n in produced})
+    for col in bloom_cols:
+        for n, bloom in _build_blooms(table, produced, col).items():
+            fresh[n][_BLOOM_PREFIX + col] = bloom
+    return fresh
+
+
+def _fresh_ids(snap: dict, new_files: list[str],
+               counts: dict) -> tuple[dict, int]:
+    """(rids, new row_hwm): positional id ranges for ``new_files`` on a
+    tracked table, drawn in order from THIS snapshot's ``row_hwm`` —
+    called inside a CAS loop, so racing writers get disjoint ranges.
+    Ids live only in the manifest (``rids[file] = base``; a read
+    computes ``base + row_index``); the hwm only grows, so deleted ids
+    are never reused."""
+    hwm = snap["row_hwm"]
+    rids = {}
+    for n in new_files:
+        rids[n] = hwm
+        hwm += counts[n]
+    return rids, hwm
+
+
+def _dml_stats(table: str, snap: dict, produced: list[str]) -> dict:
+    """Bounds for a DML rewrite's outputs over the columns the snapshot
+    already bounds; Bloom indexes are not rebuilt (rewritten files read
+    conservatively until compaction re-indexes them)."""
+    cols = sorted({c for s in snap.get("stats", {}).values() for c in s
+                   if not c.startswith(_BLOOM_PREFIX)})
+    return _collect_file_stats(table, produced, cols) if cols else {}
+
+
+def _rewrite_ids(snap: dict, produced: list[str]) -> dict:
+    """``rids`` entries for a rewrite's outputs: on a tracked table the
+    ids are MATERIALIZED in the files (physical ``_rid``), which the
+    manifest records as a None base."""
+    return {n: None for n in produced} if _tracked(snap) else {}
+
+
+def _read_rewrite_source(spark: SparkSession, table: str, snap: dict,
+                         names: list[str]) -> DataFrame:
+    """The live rows of ``names`` a rewrite carries (deletion vectors
+    applied). On a row-tracked table they are read with ``_rid``
+    resolved (base + position) so the rewrite stages the id as a
+    physical column — after the commit the ids are data, immune to the
+    positional shifts applied deletion vectors cause (Delta row
+    tracking's rule)."""
+    if _tracked(snap):
+        return _read_tracked_files(spark, table, snap, names)
+    return _read_files_masked(spark, table, snap, names)
+
+
+def _split_by_bounds(snap: dict, col: str, lo, hi) -> tuple[list, list]:
+    """(files that may hold ``col`` in [lo, hi], files that provably
+    cannot) by the manifest bounds, resolved through the rename chain;
+    files without bounds, and un-normalizable predicates, count as
+    affected (conservative)."""
+    stats = snap.get("stats", {})
+    chain = snap.get("renames", [])
+    nlo, nhi = _stat_value(lo), _stat_value(hi)
+    affected, kept = [], []
+    for name in snap["files"]:
+        b = _file_bounds(stats.get(name, {}), col, chain)
+        if (b is None or nlo is None or nhi is None
+                or not (b[0] > nhi or b[1] < nlo)):
+            affected.append(name)
+        else:
+            kept.append(name)
+    return affected, kept
 
 
 def _df_schema_map(df: DataFrame) -> dict:
@@ -990,48 +1030,24 @@ def tx_delete_range(spark: SparkSession, table: str, col: str, lo, hi,
     from rewriting the whole table."""
     from pyspark.sql import functions as F
 
-    nlo, nhi = _stat_value(lo), _stat_value(hi)
     for _ in range(max_retries):
         snap = tx_snapshot(table)
-        stats = snap.get("stats", {})
-        chain = snap.get("renames", [])
-        affected, kept = [], []
-        for name in snap["files"]:
-            b = _file_bounds(stats.get(name, {}), col, chain)
-            if (b is None or nlo is None or nhi is None
-                    or not (b[0] > nhi or b[1] < nlo)):
-                affected.append(name)
-            else:
-                kept.append(name)
+        affected, kept = _split_by_bounds(snap, col, lo, hi)
         if not affected:
             return snap["version"]
         # row-tracked tables: survivors carry their ``_rid`` through the
         # rewrite (materialized in the produced files), so a COW delete
         # preserves row identity exactly like a DV delete does
-        tracked = bool(snap.get("rids"))
-        src = (_read_tracked_files(spark, table, snap, affected)
-               if tracked
-               else _read_files_masked(spark, table, snap, affected))
+        src = _read_rewrite_source(spark, table, snap, affected)
         survivors = src.filter(
             F.col(col).isNull() | ~F.col(col).between(lo, hi))
         produced = _stage_dataframe(survivors, table,
                                     n_files=max(1, len(affected) // 2))
-        stat_cols = sorted({c for s in stats.values() for c in s})
-        fresh = (_collect_file_stats(table, produced, stat_cols)
-                 if stat_cols else {})
-        keep_dvs = {n: d for n, d in snap.get("dvs", {}).items()
-                    if n in kept}
-        new_rids = None
-        if tracked:
-            new_rids = {n: b for n, b in snap["rids"].items() if n in kept}
-            for n in produced:
-                new_rids[n] = None  # ids are materialized in the file
         try:
-            return _commit(
-                table, snap["version"], kept + produced, op="delete",
-                stats=_merged_stats(snap, kept, fresh) if stats else None,
-                dvs=keep_dvs or None, add_schema=_df_schema_map(survivors),
-                rids=new_rids)
+            return _commit(table, snap, kept + produced, op="delete",
+                           schema=_df_schema_map(survivors),
+                           stats=_dml_stats(table, snap, produced),
+                           rids=_rewrite_ids(snap, produced))
         except TxConflict:
             continue
     raise TxConflict(f"delete lost {max_retries} CAS races in {table}")
@@ -1125,32 +1141,19 @@ def tx_update(spark: SparkSession, table: str, col: str, lo, hi,
     writer story; this is that surface on the transactional log."""
     from pyspark.sql import functions as F
 
-    nlo, nhi = _stat_value(lo), _stat_value(hi)
     for _ in range(max_retries):
         snap = tx_snapshot(table)
-        stats = snap.get("stats", {})
-        chain = snap.get("renames", [])
-        affected, kept = [], []
-        for name in snap["files"]:
-            b = _file_bounds(stats.get(name, {}), col, chain)
-            if (b is None or nlo is None or nhi is None
-                    or not (b[0] > nhi or b[1] < nlo)):
-                affected.append(name)
-            else:
-                kept.append(name)
+        affected, kept = _split_by_bounds(snap, col, lo, hi)
         if not affected:
             return snap["version"]
         # row-tracked tables: an UPDATE preserves row identity — the
         # rewritten rows carry their ``_rid`` (same row, new values),
         # materialized in the produced files (Delta row tracking's
         # update rule). ``set_exprs`` may not target the id column.
-        tracked = bool(snap.get("rids"))
-        if tracked and _RID in set_exprs:
+        if _tracked(snap) and _RID in set_exprs:
             raise ValueError(f"{table}: {_RID} is managed by row "
                              "tracking and cannot be SET")
-        src = (_read_tracked_files(spark, table, snap, affected)
-               if tracked
-               else _read_files_masked(spark, table, snap, affected))
+        src = _read_rewrite_source(spark, table, snap, affected)
         # the match flag is computed on PRE-update values and carried
         # through the projection: re-resolving the WHERE predicate
         # against post-update values would let an update that moves the
@@ -1178,27 +1181,16 @@ def tx_update(spark: SparkSession, table: str, col: str, lo, hi,
         # carried rows were valid when written (and ADD CONSTRAINT
         # validates the whole table) — only the transformed rows can
         # newly violate
-        _enforce_constraints(
-            updated.filter(F.col("__m")).drop("__m"), table)
+        _enforce_constraints(updated.filter(F.col("__m")).drop("__m"),
+                             table, snap.get("constraints", {}))
         updated = updated.drop("__m")
         produced = _stage_dataframe(updated, table,
                                     n_files=max(1, len(affected)))
-        stat_cols = sorted({c for s in stats.values() for c in s})
-        fresh = (_collect_file_stats(table, produced, stat_cols)
-                 if stat_cols else {})
-        keep_dvs = {n: d for n, d in snap.get("dvs", {}).items()
-                    if n in kept}
-        new_rids = None
-        if tracked:
-            new_rids = {n: b for n, b in snap["rids"].items() if n in kept}
-            for n in produced:
-                new_rids[n] = None  # ids are materialized in the file
         try:
-            return _commit(
-                table, snap["version"], kept + produced, op="update",
-                stats=_merged_stats(snap, kept, fresh) if stats else None,
-                dvs=keep_dvs or None, add_schema=_df_schema_map(updated),
-                rids=new_rids)
+            return _commit(table, snap, kept + produced, op="update",
+                           schema=_df_schema_map(updated),
+                           stats=_dml_stats(table, snap, produced),
+                           rids=_rewrite_ids(snap, produced))
         except TxConflict:
             continue
     raise TxConflict(f"update lost {max_retries} CAS races in {table}")
@@ -1206,128 +1198,19 @@ def tx_update(spark: SparkSession, table: str, col: str, lo, hi,
 
 def tx_merge_upsert(spark: SparkSession, table: str, updates: DataFrame,
                     key_col: str, max_retries: int = 3) -> int:
-    """Copy-on-write MERGE (upsert) keyed on ``key_col``: the updates'
-    observed key range picks the files that can contain matching keys
-    (manifest bounds; files without bounds conservatively rewritten),
-    those files are rewritten with matched rows REPLACED, and every
-    update row lands exactly once (replacement or insert) — all behind
-    the same CAS. Kept files cannot contain matches by the bounds
-    argument, so carrying them by name is sound, not an optimization
-    gamble. The range test is the GLOBAL [min, max] of the update
+    """Copy-on-write MERGE (upsert) keyed on ``key_col``: every update
+    row lands exactly once, REPLACING the whole table row with its key
+    or inserted — ``tx_merge`` with ``UPDATE SET *`` / ``INSERT *``.
+    Update rows must supply every table data column; extra columns are
+    added to the table (ADD COLUMN: existing rows read NULL); replaced
+    rows keep their ``_rid`` on a tracked table; keys must be unique
+    and non-null. The range test is the GLOBAL [min, max] of the update
     keys, so a batch mixing low-key replacements with high-key inserts
     spans everything and rewrites everything — batch updates by key
     locality (one merge per partition-range, the Delta usage pattern)
-    to keep it targeted. Precondition: unique keys within ``updates``
-    (duplicate update keys make 'the' replacement ambiguous — fail
-    loudly, the ``pq_train`` precedent)."""
-    from pyspark.sql import functions as F
-
-    # one pass computes cardinality AND key bounds (round 13: these were
-    # two separate driver actions, i.e. two full executions of `updates`)
-    n_rows, n_keys, ulo, uhi = updates.agg(
-        F.count(F.lit(1)), F.countDistinct(key_col),
-        F.min(key_col), F.max(key_col)).first()
-    if n_rows != n_keys:
-        raise ValueError(
-            f"tx_merge_upsert: need unique {key_col}s in updates "
-            f"(got {n_rows} rows, {n_keys} distinct)")
-    if n_rows == 0:
-        return tx_latest_version(table)
-    # generated columns: computed when absent, validated when supplied
-    # — replacement rows enter the table whole, so they go through the
-    # same gate as an append (ADVICE r9 high)
-    gens = tx_generated(table)
-    updates = _apply_generated(updates, table, gens)
-    validated = tx_constraints(table)
-    _enforce_constraints(updates, table, validated)
-    nulo, nuhi = _stat_value(ulo), _stat_value(uhi)
-    for _ in range(max_retries):
-        snap = tx_snapshot(table)
-        if snap.get("generated", {}) != gens:
-            # a generator landed mid-flight: the update rows were not
-            # computed/validated under it and cannot rebase
-            raise TxConflict(
-                f"{table}: generated-column set changed during merge")
-        cs = snap.get("constraints", {})
-        if cs != validated:  # constraint landed mid-retry (TOCTOU)
-            _enforce_constraints(updates, table, cs)
-            validated = cs
-        stats = snap.get("stats", {})
-        chain = snap.get("renames", [])
-        affected, kept = [], []
-        for name in snap["files"]:
-            b = _file_bounds(stats.get(name, {}), key_col, chain)
-            if (b is None or nulo is None or nuhi is None
-                    or not (b[0] > nuhi or b[1] < nulo)):
-                affected.append(name)
-            else:
-                kept.append(name)
-        # row-tracked tables: MERGE preserves identity for replaced
-        # rows (same key, same _rid — Delta row tracking's update rule)
-        # and assigns FRESH ids to genuine inserts, which land in their
-        # own positionally-tracked files; carried survivors materialize
-        # their ids through the rewrite like compaction does.
-        tracked = bool(snap.get("rids"))
-        new_rids = None
-        hwm = None
-        if tracked:
-            if affected:
-                src = _read_tracked_files(spark, table, snap, affected)
-                _require_full_replacement(src, updates, table)
-                survivors = src.join(updates.select(key_col), key_col,
-                                     "left_anti")
-                old_ids = src.select(key_col, _RID)
-                replaced = updates.join(old_ids, key_col, "inner")
-                mat = survivors.unionByName(replaced,
-                                            allowMissingColumns=True)
-                inserts = updates.join(old_ids.select(key_col), key_col,
-                                       "left_anti")
-            else:
-                mat = None
-                inserts = updates
-            produced = ([] if mat is None else _stage_dataframe(
-                mat, table, n_files=max(1, len(affected))))
-            ins_files = _stage_dataframe(inserts, table, n_files=1)
-            ins_counts = {n: _parquet_num_rows(os.path.join(table, n))
-                          for n in ins_files}
-            # zero-row staged files carry nothing — leave them as
-            # vacuum-able orphans rather than minting empty id ranges
-            ins_files = [n for n in ins_files if ins_counts[n] > 0]
-            new_rids = {n: b for n, b in snap.get("rids", {}).items()
-                        if n in kept}
-            for n in produced:
-                new_rids[n] = None  # materialized
-            hwm = snap.get("row_hwm", 0)
-            for n in ins_files:
-                new_rids[n] = hwm
-                hwm += ins_counts[n]
-            produced = produced + ins_files
-            merged = mat if mat is not None else inserts
-        elif affected:
-            src = _read_files_masked(spark, table, snap, affected)
-            _require_full_replacement(src, updates, table)
-            merged = src.join(updates.select(key_col), key_col,
-                              "left_anti").unionByName(
-                updates, allowMissingColumns=True)
-            produced = _stage_dataframe(
-                merged, table, n_files=max(1, len(affected)))
-        else:
-            merged = updates
-            produced = _stage_dataframe(merged, table, n_files=1)
-        stat_cols = sorted({c for s in stats.values() for c in s})
-        fresh = (_collect_file_stats(table, produced, stat_cols)
-                 if stat_cols else {})
-        keep_dvs = {n: d for n, d in snap.get("dvs", {}).items()
-                    if n in kept}
-        try:
-            return _commit(
-                table, snap["version"], kept + produced, op="merge",
-                stats=_merged_stats(snap, kept, fresh) if stats else None,
-                dvs=keep_dvs or None, add_schema=_df_schema_map(merged),
-                rids=new_rids, row_hwm=hwm)
-        except TxConflict:
-            continue
-    raise TxConflict(f"merge lost {max_retries} CAS races in {table}")
+    to keep it targeted."""
+    return tx_merge(spark, table, updates, key_col, when_matched_set="*",
+                    max_retries=max_retries)
 
 
 def tx_clone(src: str, dst: str, version: int | None = None) -> int:
@@ -1349,70 +1232,14 @@ def tx_clone(src: str, dst: str, version: int | None = None) -> int:
         target = os.path.join(dst, name)
         if not os.path.exists(target):
             os.link(os.path.join(src, name), target)
-    stats = snap.get("stats")
     base = tx_snapshot(dst)
-    # table METADATA clones too: without these a clone of a renamed
-    # table would read physical column names (wrong data, silently)
-    # and a constrained table would accept writes the source rejects
-    return _commit(dst, base["version"], list(snap["files"]),
-                   op=f"clone:{src}@v{snap['version']}", stats=stats,
-                   dvs=dvs or None,
-                   constraints=snap.get("constraints", {}),
-                   renames=snap.get("renames", []),
-                   drops=snap.get("drops", []),
-                   types=snap.get("types", {}),
-                   add_schema=snap.get("schema", {}),
-                   # row tracking clones too: bases keep resolving ids,
-                   # and the hwm MUST come along or the clone's next
-                   # tracked append would reissue ids from zero
-                   rids=snap.get("rids", {}),
-                   row_hwm=snap.get("row_hwm"),
-                   generated=snap.get("generated", {}))
-
-
-def tx_append_clustered(df: DataFrame, table: str,
-                        cluster_cols: list[str], n_files: int = 4,
-                        max_retries: int = 8) -> int:
-    """Append ``df`` range-clustered on ``cluster_cols`` with per-file
-    manifest bounds — PARTITION-SPEC EVOLUTION, the Iceberg property
-    that a bare Hive layout cannot give: each GENERATION of files may
-    be clustered by a different spec (yesterday by day, today by
-    (type, day)), because the pruned read (``tx_read_pruned``) tests
-    recorded bounds PER FILE rather than parsing one directory layout.
-    Re-speccing a 100 TB table therefore costs nothing for existing
-    data — old generations stay readable and prunable under the bounds
-    they were written with; only new files get the new clustering."""
-    gens = tx_generated(table)
-    df = _apply_generated(df, table, gens)  # may ADD the cluster col
-    validated = tx_constraints(table)
-    _enforce_constraints(df, table, validated)
-    out = (df.repartitionByRange(n_files, *cluster_cols)
-           .sortWithinPartitions(*cluster_cols))
-    new_files = _stage_dataframe(out, table, n_files=None)
-    fresh = _collect_file_stats(table, new_files, list(cluster_cols))
-    counts = {n: _parquet_num_rows(os.path.join(table, n))
-              for n in new_files}
-    for _ in range(max_retries):
-        snap = tx_snapshot(table)
-        if snap.get("generated", {}) != gens:
-            raise TxConflict(
-                f"{table}: generated-column set changed during append")
-        cs = snap.get("constraints", {})
-        if cs != validated:  # constraint landed mid-retry (TOCTOU)
-            _enforce_constraints(df, table, cs)
-            validated = cs
-        new_rids, hwm = _tracked_append_rids(snap, new_files, counts)
-        try:
-            return _commit(
-                table, snap["version"], snap["files"] + new_files,
-                op="append-clustered",
-                stats=_merged_stats(snap, snap["files"], fresh),
-                add_schema=_df_schema_map(df),
-                rids=new_rids, row_hwm=hwm)
-        except TxConflict:
-            continue
-    raise TxConflict(
-        f"clustered append lost {max_retries} CAS races in {table}")
+    # the clone's first commit inherits the pinned snapshot WHOLE —
+    # stats, DVs, renames, constraints, row ids and the hwm (without
+    # it the clone's next tracked append would reissue ids from zero):
+    # only the version chain is the clone's own
+    return _commit(dst, {**snap, "version": base["version"],
+                         "ts_us": base["ts_us"]},
+                   list(snap["files"]), op=f"clone:{src}@v{snap['version']}")
 
 
 # ---------------------------------------------------------------------------
@@ -1499,18 +1326,11 @@ def tx_delete_range_dv(spark: SparkSession, table: str, col: str, lo, hi,
     scanning for matches, exactly as in the COW path."""
     from pyspark.sql import functions as F
 
-    nlo, nhi = _stat_value(lo), _stat_value(hi)
     for _ in range(max_retries):
         snap = tx_snapshot(table)
-        stats = snap.get("stats", {})
         chain = snap.get("renames", [])
-        dvs = dict(snap.get("dvs", {}))
-        affected = []
-        for name in snap["files"]:
-            b = _file_bounds(stats.get(name, {}), col, chain)
-            if (b is None or nlo is None or nhi is None
-                    or not (b[0] > nhi or b[1] < nlo)):
-                affected.append(name)
+        dvs = snap.get("dvs", {})
+        affected, _ = _split_by_bounds(snap, col, lo, hi)
         if not affected:
             return snap["version"]
         # raw physical read (positions must be per-FILE, pre-rename):
@@ -1554,13 +1374,9 @@ def tx_delete_range_dv(spark: SparkSession, table: str, col: str, lo, hi,
                   else matched.unionByName(old_mask))
         dv_name = _stage_dataframe(merged.select("file", "pos"),
                                    table, n_files=1)[0]
-        new_dvs = dict(dvs)
-        for name in affected:
-            new_dvs[name] = dv_name
         try:
-            return _commit(table, snap["version"], snap["files"],
-                           op="delete-dv",
-                           stats=snap.get("stats"), dvs=new_dvs)
+            return _commit(table, snap, snap["files"], op="delete-dv",
+                           dvs={name: dv_name for name in affected})
         except TxConflict:
             continue
     raise TxConflict(f"dv delete lost {max_retries} CAS races in {table}")
@@ -1742,16 +1558,15 @@ def tx_restore(table: str, version: int, max_retries: int = 8) -> int:
         cur = tx_snapshot(table)
         if cur["version"] == version:
             return version
+        # the per-file maps are the OLD snapshot's (a DV added since
+        # must not survive; the restored files' id bases come back with
+        # them); table metadata, the hwm included, is the CURRENT one's
+        # — the hwm never rolls back, so ids burned by the undone
+        # commits are never reissued
+        base = {**cur, **{k: snap_old.get(k, {}) for k in _FILE_MAPS}}
         try:
-            # row tracking: the restored files' id bases come back with
-            # them; the hwm does NOT roll back (carry-forward keeps the
-            # CURRENT one, which is >= the old by monotonicity), so ids
-            # burned by the undone commits are never reissued
-            return _commit(table, cur["version"], list(snap_old["files"]),
-                           op=f"restore:v{version}",
-                           stats=snap_old.get("stats"),
-                           dvs=snap_old.get("dvs"),
-                           rids=snap_old.get("rids", {}))
+            return _commit(table, base, list(snap_old["files"]),
+                           op=f"restore:v{version}")
         except TxConflict:
             continue
     raise TxConflict(f"restore lost {max_retries} CAS races in {table}")
@@ -1860,59 +1675,6 @@ def _build_blooms(table: str, names: list[str], col: str,
                 words[ix >> 6] |= 1 << (ix & 63)
         out[name] = {"bits": bits, "k": k, "words": words}
     return out
-
-
-def tx_append_bloomed(df: DataFrame, table: str, bloom_col: str,
-                      n_files: int | None = None,
-                      max_retries: int = 8) -> int:
-    """Append with a PER-FILE BLOOM FILTER INDEX on ``bloom_col``
-    (plus its min/max bounds) recorded in the manifest stats under
-    ``__bloom__<col>`` — the key namespace keeps it out of every
-    bounds reader's way, and ``_merged_stats`` carries it forward for
-    files later ops keep by name (rewritten files simply lose the
-    bloom and are conservatively read until re-indexed). This is the
-    skipping structure for the lookup min/max CANNOT serve: a
-    high-cardinality id scattered across every file overlaps every
-    [min, max], but each file's bloom proves definite absence —
-    ``tx_read_bloom_point`` then opens only the maybe-files. No false
-    negatives by construction (every stored value was inserted), so
-    correctness never depends on the filter; the residual predicate
-    re-applies exactness."""
-    gens = tx_generated(table)
-    df = _apply_generated(df, table, gens)
-    validated = tx_constraints(table)
-    _enforce_constraints(df, table, validated)
-    new_files = _stage_dataframe(df, table, n_files)
-    bounds = _collect_file_stats(table, new_files, [bloom_col])
-    blooms = _build_blooms(table, new_files, bloom_col)
-    fresh = {}
-    for n in new_files:
-        ent = dict(bounds.get(n, {}))
-        ent[_BLOOM_PREFIX + bloom_col] = blooms[n]
-        fresh[n] = ent
-    counts = {n: _parquet_num_rows(os.path.join(table, n))
-              for n in new_files}
-    for _ in range(max_retries):
-        snap = tx_snapshot(table)
-        if snap.get("generated", {}) != gens:
-            raise TxConflict(
-                f"{table}: generated-column set changed during append")
-        cs = snap.get("constraints", {})
-        if cs != validated:  # constraint landed mid-retry (TOCTOU)
-            _enforce_constraints(df, table, cs)
-            validated = cs
-        new_rids, hwm = _tracked_append_rids(snap, new_files, counts)
-        try:
-            return _commit(
-                table, snap["version"], snap["files"] + new_files,
-                op="append-bloomed",
-                stats=_merged_stats(snap, snap["files"], fresh),
-                dvs=snap.get("dvs"), add_schema=_df_schema_map(df),
-                rids=new_rids, row_hwm=hwm)
-        except TxConflict:
-            continue
-    raise TxConflict(
-        f"bloomed append lost {max_retries} CAS races in {table}")
 
 
 def tx_read_bloom_point(spark: SparkSession, table: str, col: str,
@@ -2031,9 +1793,8 @@ def tx_set_constraint(spark: SparkSession, table: str, name: str,
                 _read_files_masked(spark, table, snap, snap["files"]),
                 table, {name: predicate})
         try:
-            return _commit(table, snap["version"], list(snap["files"]),
+            return _commit(table, snap, list(snap["files"]),
                            op=f"set-constraint:{name}",
-                           stats=snap.get("stats"), dvs=snap.get("dvs"),
                            constraints=cs)
         except TxConflict:
             continue
@@ -2048,9 +1809,8 @@ def tx_drop_constraint(table: str, name: str, max_retries: int = 8) -> int:
         cs = dict(snap.get("constraints", {}))
         cs.pop(name, None)
         try:
-            return _commit(table, snap["version"], list(snap["files"]),
+            return _commit(table, snap, list(snap["files"]),
                            op=f"drop-constraint:{name}",
-                           stats=snap.get("stats"), dvs=snap.get("dvs"),
                            constraints=cs)
         except TxConflict:
             continue
@@ -2070,9 +1830,8 @@ def tx_drop_generated(table: str, col: str, max_retries: int = 8) -> int:
         gens = dict(snap.get("generated", {}))
         gens.pop(col, None)
         try:
-            return _commit(table, snap["version"], list(snap["files"]),
+            return _commit(table, snap, list(snap["files"]),
                            op=f"drop-generated:{col}",
-                           stats=snap.get("stats"), dvs=snap.get("dvs"),
                            generated=gens)
         except TxConflict:
             continue
@@ -2222,9 +1981,8 @@ def tx_rename_column(table: str, old: str, new: str,
         if old in types:
             types[new] = types.pop(old)
         try:
-            return _commit(table, snap["version"], list(snap["files"]),
+            return _commit(table, snap, list(snap["files"]),
                            op=f"rename:{old}->{new}",
-                           stats=snap.get("stats"), dvs=snap.get("dvs"),
                            renames=chain, types=types)
         except TxConflict:
             continue
@@ -2266,9 +2024,8 @@ def tx_drop_column(table: str, col: str, max_retries: int = 8) -> int:
         if col not in drops:
             drops.append(col)
         try:
-            return _commit(table, snap["version"], list(snap["files"]),
+            return _commit(table, snap, list(snap["files"]),
                            op=f"drop-column:{col}",
-                           stats=snap.get("stats"), dvs=snap.get("dvs"),
                            drops=drops)
         except TxConflict:
             continue
@@ -2395,9 +2152,8 @@ def tx_widen_column(table: str, col: str, to_type: str,
         types = dict(snap.get("types", {}))
         types[col] = to_type
         try:
-            return _commit(table, snap["version"], list(snap["files"]),
+            return _commit(table, snap, list(snap["files"]),
                            op=f"widen:{col}:{cur}->{to_type}",
-                           stats=snap.get("stats"), dvs=snap.get("dvs"),
                            types=types)
         except TxConflict:
             continue
@@ -2406,60 +2162,67 @@ def tx_widen_column(table: str, col: str, to_type: str,
 
 def tx_merge(spark: SparkSession, table: str, source: DataFrame,
              key_col: str,
-             when_matched_set: dict[str, str] | None = None,
+             when_matched_set: dict[str, str] | str | None = None,
              matched_condition: str | None = None,
              insert_not_matched: bool = True,
              delete_matched: bool = False,
              max_retries: int = 3) -> int:
     """FULL CONDITIONAL MERGE — the Delta statement users actually
-    write, generalizing ``tx_merge_upsert`` (replace-whole-row) to the
-    three-clause form::
+    write, in its three-clause form::
 
         MERGE INTO target t USING source s ON t.key = s.key
         WHEN MATCHED [AND <matched_condition>] THEN
             UPDATE SET col = <expr>   -- when_matched_set
+          | UPDATE SET *              -- when_matched_set="*"
           | DELETE                    -- delete_matched=True
         WHEN NOT MATCHED THEN INSERT *   -- insert_not_matched
 
     Update expressions evaluate over the joined row: target columns
     under their own names, source columns prefixed ``__s_`` (e.g.
-    ``{"cents": "cents + __s_cents"}`` accumulates). The matched
-    condition sees the same namespace; matched rows failing it carry
-    through UNCHANGED (and cancel to weight 0 in the change feed —
-    no-op matches emit nothing, the Delta CDF convention). Exactly one
-    of update/delete may be chosen for the matched clause.
+    ``{"cents": "cents + __s_cents"}`` accumulates); each keeps its
+    column's dtype. ``"*"`` replaces the whole row with the source row
+    (``tx_merge_upsert``): the source must supply every table data
+    column, and its extra columns are added to the table (ADD COLUMN).
+    The matched condition sees the same namespace; matched rows failing
+    it carry through UNCHANGED (and cancel to weight 0 in the change
+    feed — no-op matches emit nothing, the Delta CDF convention).
+    Exactly one of update/delete may be chosen for the matched clause.
 
-    Scale shape identical to the upsert: the source's observed key
-    range picks the files that can contain matches (manifest bounds
-    resolved through the rename chain; files without bounds are
-    conservatively rewritten), ONLY those are read back (deletion
+    Scale shape: one pass over the source checks its keys and takes
+    their [min, max]; the manifest bounds (resolved through the rename
+    chain; files without bounds are conservatively rewritten) pick the
+    files that can contain matches, ONLY those are read back (deletion
     vectors applied) and swapped behind the CAS; kept files cannot
     contain matches by the bounds argument. NOT MATCHED needs only the
     affected files' keys for the same reason. Unique non-null source
-    keys are a precondition (fail loudly). CHECK constraints are
-    enforced on the full rewritten relation inside the retry loop, so
-    a constraint landing mid-race still binds (the TOCTOU rule)."""
+    keys are a precondition (fail loudly — duplicates make 'the'
+    replacement ambiguous). CHECK constraints are enforced on the full
+    rewritten relation inside the retry loop, so a constraint landing
+    mid-race still binds (the TOCTOU rule). On a row-tracked table
+    updated and carried rows keep their ``_rid`` (materialized through
+    the rewrite) and genuine inserts land in their own files with fresh
+    ids."""
     from pyspark.sql import functions as F
 
+    replace_row = when_matched_set == "*"
     if delete_matched and when_matched_set:
         raise ValueError(
             "tx_merge: choose when_matched_set OR delete_matched, not both")
-    n_rows, n_keys = source.agg(
-        F.count(F.lit(1)), F.countDistinct(key_col)).first()
+    n_rows, n_keys, ulo, uhi = source.agg(
+        F.count(F.lit(1)), F.countDistinct(key_col),
+        F.min(key_col), F.max(key_col)).first()
     if n_rows != n_keys:
         raise ValueError(
             f"tx_merge: need unique non-null {key_col}s in source "
             f"(got {n_rows} rows, {n_keys} distinct non-null)")
     if n_rows == 0:
         return tx_latest_version(table)
-    # generated columns: insert rows enter the table whole, so they go
-    # through the same compute/validate gate as an append; matched
-    # updates are regenerated below (ADVICE r9 high)
+    # generated columns: inserted and replacing rows enter the table
+    # whole, so they go through the same compute/validate gate as an
+    # append; explicit SETs are regenerated below (ADVICE r9 high)
     gens = tx_generated(table)
-    if insert_not_matched:
+    if insert_not_matched or replace_row:
         source = _apply_generated(source, table, gens)
-    ulo, uhi = source.agg(F.min(key_col), F.max(key_col)).first()
-    nulo, nuhi = _stat_value(ulo), _stat_value(uhi)
     src_pref = source.select(
         *(F.col(c).alias("__s_" + c) for c in source.columns))
     for _ in range(max_retries):
@@ -2469,30 +2232,24 @@ def tx_merge(spark: SparkSession, table: str, source: DataFrame,
             # computed/validated under it and cannot rebase
             raise TxConflict(
                 f"{table}: generated-column set changed during merge")
-        stats = snap.get("stats", {})
-        chain = snap.get("renames", [])
-        affected, kept = [], []
-        for name in snap["files"]:
-            b = _file_bounds(stats.get(name, {}), key_col, chain)
-            if (b is None or nulo is None or nuhi is None
-                    or not (b[0] > nuhi or b[1] < nulo)):
-                affected.append(name)
-            else:
-                kept.append(name)
-        # row-tracked tables: updated/carried rows keep their _rid
-        # (materialized through the rewrite); genuine inserts land in
-        # their own positionally-tracked files with fresh ids
-        tracked = bool(snap.get("rids"))
-        if tracked and when_matched_set and _RID in when_matched_set:
+        affected, kept = _split_by_bounds(snap, key_col, ulo, uhi)
+        tracked = _tracked(snap)
+        ws = {} if replace_row else (when_matched_set or {})
+        if tracked and _RID in ws:
             raise ValueError(f"{table}: {_RID} is managed by row "
                              "tracking and cannot be SET")
         parts = []
-        ins_part = None  # tracked mode: inserts staged separately
+        inserts = source if insert_not_matched else None
         if affected:
-            tgt = (_read_tracked_files(spark, table, snap, affected)
-                   if tracked
-                   else _read_files_masked(spark, table, snap, affected))
+            tgt = _read_rewrite_source(spark, table, snap, affected)
             tgt_cols = tgt.columns
+            if replace_row:
+                _require_full_replacement(tgt, source, table)
+                sets = {c: F.col("__s_" + c) for c in source.columns
+                        if c not in (key_col, _RID)}
+            else:
+                sets = {c: F.expr(e).cast(tgt.schema[c].dataType)
+                        for c, e in ws.items() if c in tgt_cols}
             j = tgt.join(
                 src_pref,
                 F.col(key_col) == F.col("__s_" + key_col), "left")
@@ -2502,16 +2259,16 @@ def tx_merge(spark: SparkSession, table: str, source: DataFrame,
             if delete_matched:
                 survivors = j.filter(~cond).select(*tgt_cols)
             else:
-                ws = when_matched_set or {}
-                survivors = j.select(*(
-                    F.when(cond,
-                           F.expr(ws[c]).cast(tgt.schema[c].dataType))
-                    .otherwise(F.col(c)).alias(c) if c in ws
-                    else F.col(c)
-                    for c in tgt_cols), cond.alias("__m"))
+                survivors = j.select(
+                    *(F.when(cond, sets[c]).otherwise(F.col(c)).alias(c)
+                      if c in sets else F.col(c) for c in tgt_cols),
+                    *(F.when(cond, e).alias(c) for c, e in sets.items()
+                      if c not in tgt_cols),
+                    cond.alias("__m"))
                 # a SET that moves a generator's base recomputes the
                 # generated column; a SET on the generated column is
-                # validated (ADVICE r9 high — see _regenerate_updated)
+                # validated (see _regenerate_updated). SET * rows were
+                # computed/validated with the source above.
                 survivors = _regenerate_updated(
                     survivors, table, gens, ws, F.col("__m")).drop("__m")
             parts.append(survivors)
@@ -2522,64 +2279,39 @@ def tx_merge(spark: SparkSession, table: str, source: DataFrame,
                     "left_anti",
                 ).select(*(F.col("__s_" + c).alias(c)
                            for c in source.columns))
-                if tracked:
-                    ins_part = inserts
-                else:
-                    parts.append(inserts)
-        elif insert_not_matched:
-            # no file can contain a matching key: every source row
-            # is an insert
-            if tracked:
-                ins_part = source
-            else:
-                parts.append(source)
-        if not parts and ins_part is None:
+        if inserts is not None and not tracked:
+            parts.append(inserts)
+            inserts = None
+        if not parts and inserts is None:
             return snap["version"]  # delete/update merge with no overlap
         merged = None
         for p in parts:
             merged = (p if merged is None
                       else _union_gen_tolerant(merged, p, gens))
-        cs = snap.get("constraints", {})
-        if merged is not None:
-            _enforce_constraints(merged, table, cs)
-        if ins_part is not None:
-            _enforce_constraints(ins_part, table, cs)
+        written = [r for r in (merged, inserts) if r is not None]
+        for rel in written:
+            _enforce_constraints(rel, table, snap.get("constraints", {}))
         produced = ([] if merged is None else _stage_dataframe(
-            merged, table,
-            n_files=max(1, len(affected)) if affected else 1))
-        new_rids = None
-        hwm = None
-        if tracked:
-            new_rids = {n: b for n, b in snap.get("rids", {}).items()
-                        if n in kept}
-            for n in produced:
-                new_rids[n] = None  # materialized
-            hwm = snap.get("row_hwm", 0)
-            if ins_part is not None:
-                ins_files = _stage_dataframe(ins_part, table, n_files=1)
-                ins_counts = {n: _parquet_num_rows(os.path.join(table, n))
-                              for n in ins_files}
-                ins_files = [n for n in ins_files if ins_counts[n] > 0]
-                for n in ins_files:
-                    new_rids[n] = hwm
-                    hwm += ins_counts[n]
-                produced = produced + ins_files
-        elif ins_part is not None:  # unreachable, kept for symmetry
-            produced += _stage_dataframe(ins_part, table, n_files=1)
-        stat_cols = sorted({c for s in stats.values() for c in s
-                            if not c.startswith(_BLOOM_PREFIX)})
-        fresh = (_collect_file_stats(table, produced, stat_cols)
-                 if stat_cols else {})
-        keep_dvs = {n: d for n, d in snap.get("dvs", {}).items()
-                    if n in kept}
+            merged, table, n_files=max(1, len(affected))))
+        rids, hwm = _rewrite_ids(snap, produced), None
+        if inserts is not None:
+            # tracked inserts: their own files, fresh ids; zero-row
+            # staged files are left as vacuum-able orphans rather than
+            # minting empty id ranges
+            ins_files = _stage_dataframe(inserts, table, n_files=1)
+            counts = {n: _parquet_num_rows(os.path.join(table, n))
+                      for n in ins_files}
+            ins_files = [n for n in ins_files if counts[n]]
+            fresh, hwm = _fresh_ids(snap, ins_files, counts)
+            rids.update(fresh)
+            produced += ins_files
         try:
             return _commit(
-                table, snap["version"], kept + produced, op="merge",
-                stats=_merged_stats(snap, kept, fresh) if stats else None,
-                dvs=keep_dvs or None,
-                add_schema=_df_schema_map(
-                    merged if merged is not None else ins_part),
-                rids=new_rids, row_hwm=hwm)
+                table, snap, kept + produced, op="merge",
+                schema={k: v for r in written
+                        for k, v in _df_schema_map(r).items()},
+                stats=_dml_stats(table, snap, produced),
+                rids=rids, row_hwm=hwm)
         except TxConflict:
             continue
     raise TxConflict(f"merge lost {max_retries} CAS races in {table}")
@@ -2649,58 +2381,23 @@ def tx_reorg_purge(spark: SparkSession, table: str,
             if name in dvs:
                 clean.remove(name)
                 lagging.append(name)
-        if not lagging:
-            # physically clean already: clear the metadata only
-            try:
-                return _commit(table, snap["version"],
-                               list(snap["files"]), op="reorg-purge",
-                               stats=snap.get("stats"), renames=[],
-                               drops=[], types={})
-            except TxConflict:
-                continue
-        # row-tracked tables: the purge rewrite MATERIALIZES ids, the
-        # same rule as compaction/OPTIMIZE (tracked read applies masks
-        # on the same positions it resolves ids from)
-        tracked = bool(snap.get("rids"))
-        src = (_read_tracked_files(spark, table, snap, lagging)
-               if tracked
-               else _read_files_masked(spark, table, snap, lagging))
-        produced = _stage_dataframe(
-            src, table, n_files=max(1, len(lagging) // 2))
-        # stats + blooms rebuilt under LOGICAL names for the outputs
-        prev_stats = snap.get("stats", {})
-        dropped = drops
-        stat_cols = sorted({
-            lc for s in prev_stats.values() for c in s
-            if not c.startswith(_BLOOM_PREFIX)
-            for lc in (_resolve_to_logical(c, chain),)
-            if lc not in dropped})
-        bloom_cols = sorted({
-            lc for s in prev_stats.values() for c in s
-            if c.startswith(_BLOOM_PREFIX)
-            for lc in (_resolve_to_logical(c[len(_BLOOM_PREFIX):], chain),)
-            if lc not in dropped})
-        stats = None
-        if stat_cols or bloom_cols:
-            fresh = (_collect_file_stats(table, produced, stat_cols)
-                     if stat_cols else {n: {} for n in produced})
-            for col in bloom_cols:
-                blooms = _build_blooms(table, produced, col)
-                for n in produced:
-                    fresh.setdefault(n, {})[_BLOOM_PREFIX + col] = blooms[n]
-            stats = _merged_stats(snap, clean, fresh)
-        keep_dvs = {n: d for n, d in dvs.items() if n in clean}
-        new_rids = None
-        if tracked:
-            new_rids = {n: b for n, b in snap["rids"].items() if n in clean}
-            for n in produced:
-                new_rids[n] = None  # ids are materialized in the file
+        produced, schema = [], {}
+        if lagging:
+            # row-tracked tables: the purge rewrite MATERIALIZES ids, the
+            # same rule as compaction/OPTIMIZE (tracked read applies
+            # masks on the same positions it resolves ids from)
+            src = _read_rewrite_source(spark, table, snap, lagging)
+            produced = _stage_dataframe(
+                src, table, n_files=max(1, len(lagging) // 2))
+            schema = _df_schema_map(src)
+        # stats + blooms rebuilt under LOGICAL names for the outputs; a
+        # physically clean table only clears the mapping metadata
         try:
-            return _commit(table, snap["version"], clean + produced,
-                           op="reorg-purge", stats=stats,
-                           dvs=keep_dvs or None, renames=[], drops=[],
-                           types={}, add_schema=_df_schema_map(src),
-                           rids=new_rids)
+            return _commit(table, snap, clean + produced, op="reorg-purge",
+                           schema=schema,
+                           stats=_rebuilt_stats(table, snap, produced),
+                           rids=_rewrite_ids(snap, produced),
+                           renames=[], drops=[], types={})
         except TxConflict:
             continue
     raise TxConflict(f"reorg lost {max_retries} CAS races in {table}")
@@ -2718,88 +2415,6 @@ def _parquet_num_rows(path: str) -> int:
     import pyarrow.parquet as papq
 
     return papq.read_metadata(path).num_rows
-
-
-def _tracked_append_rids(snap: dict, new_files: list[str],
-                         counts: dict) -> tuple[dict | None, int | None]:
-    """Positional id-base assignment for an append onto a TRACKED
-    table: (rids-with-new-bases, new-hwm), or (None, None) when the
-    table isn't tracked (plain appends on plain tables stay plain).
-    Call inside the CAS loop — the hwm must come from the snapshot
-    each retry so racing appends get disjoint ranges."""
-    if not snap.get("rids"):
-        return None, None
-    rids = {n: b for n, b in snap["rids"].items() if n in snap["files"]}
-    base = snap.get("row_hwm", 0)
-    for n in new_files:
-        rids[n] = base
-        base += counts[n]
-    return rids, base
-
-
-def tx_append_tracked(df: DataFrame, table: str, n_files: int | None = None,
-                      max_retries: int = 8,
-                      stat_cols: list[str] | None = None) -> int:
-    """Append with ROW TRACKING (Delta's row-tracking feature): every
-    row gets a table-unique, monotonically-increasing id that survives
-    physical rewrites. An append stores ZERO extra bytes — the manifest
-    maps each fresh file to a base id (``rids[file] = base``) and a
-    tracked read computes ``base + _metadata.row_index``; the manifest
-    ``row_hwm`` is the next id to assign. Rewrites MATERIALIZE ids as a
-    physical ``_rid`` column (see ``tx_compact``), so positional-shift
-    hazards (a compaction that applies a deletion vector, dropping rows
-    from the middle of a file) can never recompute an id: once a file
-    is rewritten its ids are data, not arithmetic. Deleted ids are
-    never reused (the hwm only grows).
-
-    Why it matters at 100 TB: row identity is what lets change-data
-    feeds, incremental MERGE sources, and audit diffs say "this is the
-    SAME row, updated" across compactions — without it every OPTIMIZE
-    looks like a full delete+reinsert to any downstream consumer.
-
-    Base assignment happens inside the CAS loop (the hwm is re-read on
-    every conflict retry), so two racing tracked appends get disjoint
-    id ranges no matter who wins. Reference scope: the reference keeps
-    list-position identity for in-memory records (memory.py:63-90);
-    this is that identity made durable and rewrite-stable.
-    """
-    gens = tx_generated(table)
-    df = _apply_generated(df, table, gens)
-    validated = tx_constraints(table)
-    _enforce_constraints(df, table, validated)
-    new_files = _stage_dataframe(df, table, n_files)
-    counts = {n: _parquet_num_rows(os.path.join(table, n))
-              for n in new_files}
-    fresh_stats = (_collect_file_stats(table, new_files, sorted(stat_cols))
-                   if stat_cols else None)
-    for _ in range(max_retries):
-        snap = tx_snapshot(table)
-        if snap.get("generated", {}) != gens:
-            raise TxConflict(
-                f"{table}: generated-column set changed during append")
-        cs = snap.get("constraints", {})
-        if cs != validated:
-            _enforce_constraints(df, table, cs)
-            validated = cs
-        # prune entries for files no longer live, then assign fresh
-        # bases from the snapshot's high-water-mark in staging order
-        rids = {n: b for n, b in snap.get("rids", {}).items()
-                if n in snap["files"]}
-        base = snap.get("row_hwm", 0)
-        for n in new_files:
-            rids[n] = base
-            base += counts[n]
-        try:
-            return _commit(
-                table, snap["version"], snap["files"] + new_files,
-                op="append",
-                stats=(_merged_stats(snap, snap["files"], fresh_stats or {})
-                       if (snap.get("stats") or fresh_stats) else None),
-                dvs=snap.get("dvs"), add_schema=_df_schema_map(df),
-                rids=rids, row_hwm=base)
-        except TxConflict:
-            continue
-    raise TxConflict(f"tracked append lost {max_retries} CAS races in {table}")
 
 
 def _read_tracked_files(spark: SparkSession, table: str, snap: dict,
@@ -2820,8 +2435,9 @@ def _read_tracked_files(spark: SparkSession, table: str, snap: dict,
     untracked = [n for n in names if n not in rids]
     if untracked:
         raise ValueError(
-            f"{table}: files without row-tracking metadata (written by an "
-            f"untracked op? use tx_append_tracked): {sorted(untracked)[:3]}")
+            f"{table}: files without row-tracking metadata (a table is "
+            f"tracked only if created with tx_init(table, "
+            f"row_tracking=True)): {sorted(untracked)[:3]}")
     positional = {n: b for n, b in rids.items()
                   if n in names and b is not None}
     materialized = [n for n in names if rids.get(n) is None]
@@ -2890,7 +2506,7 @@ def tx_changes_by_rid(spark: SparkSession, table: str,
     ``delete`` (pre-image); present in both with any column changed, an
     ``update_pre``/``update_post`` pair. Because ids survive every
     rewrite (compaction, COW DELETE/UPDATE, DV deletes — see
-    ``tx_append_tracked``), a compaction between the two versions
+    ``tx_read_tracked``), a compaction between the two versions
     contributes NOTHING to the feed, and an update reports as "same
     row, new values" — without row identity the same diff would have
     to key on all columns and report every update as delete+insert,
@@ -3026,9 +2642,8 @@ def tx_set_generated(table: str, col: str, base: str, div: int,
                 "written (existing values are unvalidated)")
         gens[col] = {"base": base, "div": int(div)}
         try:
-            return _commit(table, snap["version"], snap["files"],
-                           op="set-generated", stats=snap.get("stats"),
-                           dvs=snap.get("dvs"), generated=gens)
+            return _commit(table, snap, snap["files"],
+                           op="set-generated", generated=gens)
         except TxConflict:
             continue
     raise TxConflict(f"set-generated lost {max_retries} CAS races in {table}")
@@ -3060,59 +2675,3 @@ def _apply_generated(df: DataFrame, table: str, gens: dict) -> DataFrame:
         else:
             df = df.withColumn(col, expr)
     return df
-
-
-def tx_append_tracked_txn(df: DataFrame, table: str, app: str, batch: int,
-                          n_files: int | None = None,
-                          max_retries: int = 8,
-                          shuffle: bool = False) -> int:
-    """EXACTLY-ONCE tracked append: ``tx_append_txn``'s idempotent
-    (app, batch) writer-transaction key composed with row tracking —
-    the streaming-sink form. A replayed micro-batch returns the
-    original commit BEFORE staging anything, so replay can neither
-    double-append rows nor burn id range (the hwm moves only inside
-    the winning commit's CAS); a crash-after-stage leaks only
-    unreferenced orphan files (no ids — ids exist solely in the
-    manifest). Together with ``tx_changes_by_rid`` this gives a
-    streaming landing zone whose rows carry durable identity from
-    their very first commit."""
-    done = tx_txn_version(table, app, batch)
-    if done is not None:
-        return done
-    gens = tx_generated(table)
-    df = _apply_generated(df, table, gens)
-    validated = tx_constraints(table)
-    _enforce_constraints(df, table, validated)
-    new_files = _stage_dataframe(df, table, n_files, shuffle=shuffle)
-    counts = {n: _parquet_num_rows(os.path.join(table, n))
-              for n in new_files}
-    for _ in range(max_retries):
-        done = tx_txn_version(table, app, batch)
-        if done is not None:
-            return done  # concurrent replay won; our files are orphans
-        snap = tx_snapshot(table)
-        if snap.get("generated", {}) != gens:
-            raise TxConflict(
-                f"{table}: generated-column set changed during append")
-        cs = snap.get("constraints", {})
-        if cs != validated:
-            _enforce_constraints(df, table, cs)
-            validated = cs
-        rids = {n: b for n, b in snap.get("rids", {}).items()
-                if n in snap["files"]}
-        base = snap.get("row_hwm", 0)
-        for n in new_files:
-            rids[n] = base
-            base += counts[n]
-        try:
-            return _commit(
-                table, snap["version"], snap["files"] + new_files,
-                op="append", txn={"app": app, "batch": batch},
-                stats=(_merged_stats(snap, snap["files"], {})
-                       if snap.get("stats") else None),
-                dvs=snap.get("dvs"), add_schema=_df_schema_map(df),
-                rids=rids, row_hwm=base)
-        except TxConflict:
-            continue
-    raise TxConflict(
-        f"tracked txn append lost {max_retries} CAS races in {table}")

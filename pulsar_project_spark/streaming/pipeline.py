@@ -177,72 +177,91 @@ def _drain(sdf: DataFrame, checkpoint: str | None = None, mode: str = "append",
     q.awaitTermination()
 
 
+def _land_stream(sdf: DataFrame, table: str, ckpt: str, app: str, *,
+                 mode: str, n_files: int, shuffle: bool = False,
+                 gate: bool = False) -> None:
+    """Drive ``sdf`` to completion (``availableNow``), landing every
+    micro-batch in the tx ``table`` as one exactly-once
+    ``tx_append(txn=(app, batchId))``: Structured Streaming replays a
+    failed batch with the SAME batchId, and the txn id rides INSIDE the
+    manifest, so the replay check and the commit share one atomic CAS.
+    In update mode each emission (a running total) is stamped with its
+    ``batch_id``, so the reader resolves last-wins per key by it.
+
+    ``shuffle`` sizes each batch's files with repartition instead of
+    coalesce — right when the batch's input is reduce-side compute
+    (stateful agg / applyInPandasWithState), which coalesce(1) would
+    serialize into one task (3.5x on keep-last, round 12); a
+    pass-through projection keeps coalesce.
+
+    ``gate=True`` makes exactly-once a GATE, not a claim: restart the
+    stream against the same checkpoint (no new files → neither the
+    table version nor the row-id high-water mark may move, asserted)
+    and force-replay batch 0's commit under its txn id (must
+    deduplicate, asserted). The gate arms run in tests/test_streaming.py
+    (VERDICT r11 order #1); the declared queries drain ONCE — their
+    oracles still catch a lost or doubled batch, the gate certifies the
+    restart/replay machinery itself."""
+    from pulsar_project_spark.sources.txlog import (
+        tx_append,
+        tx_read,
+        tx_snapshot,
+    )
+
+    def sink(bdf: DataFrame, batch_id: int) -> None:
+        if mode == "update":
+            bdf = bdf.withColumn("batch_id", F.lit(batch_id))
+        tx_append(bdf, table, n_files, shuffle=shuffle, txn=(app, batch_id))
+
+    def drain_once() -> None:
+        (sdf.writeStream.outputMode(mode)
+         .option("checkpointLocation", ckpt)
+         .foreachBatch(sink)
+         .trigger(availableNow=True)
+         .start()
+         .awaitTermination())
+
+    def state() -> tuple:
+        snap = tx_snapshot(table)
+        return snap["version"], snap.get("row_hwm")
+
+    drain_once()
+    if not gate:
+        return
+    before = state()
+    drain_once()  # restart, same checkpoint: must commit nothing
+    if state() != before:
+        raise AssertionError(
+            "checkpoint restart re-committed a batch or burned id range")
+    if tx_snapshot(table)["files"]:
+        # executor-crash replay under batch 0's txn id: the payload is
+        # irrelevant — the id already in the manifest chain MUST make
+        # the call a no-op for the file list and the id high-water mark
+        tx_append(tx_read(sdf.sparkSession, table), table, 1,
+                  txn=(app, 0))
+        if state() != before:
+            raise AssertionError("replayed batch 0 was not deduplicated")
+
+
 def _tx_landed_update_stream(sdf: DataFrame, base: str, app: str,
                              spark: SparkSession,
                              gate: bool = False) -> DataFrame:
     """Drive an UPDATE-mode streaming DataFrame to completion, landing
     every micro-batch's emission (running totals per key, stamped with
-    its batch id) into a transactional table via idempotent
-    ``tx_append_txn`` keyed (app, batchId). Returns the landed table;
-    the caller resolves last-wins per key by batch_id.
-
-    ``gate=True`` additionally makes exactly-once a GATE, not a claim:
-    restart the stream against the same checkpoint (no new files → the
-    table version must not move, asserted) and force-replay batch 0's
-    commit under its txn id (must deduplicate, asserted). The gate arms
-    run in tests/test_streaming.py (VERDICT r11 order #1) — the
-    declared queries drain ONCE; their oracles still catch a lost or
-    doubled batch (the landed census hashes against the raw parquet),
-    the gate certifies the restart/replay machinery itself.
-
-    This is the ``run_streaming_tx_sink`` recipe generalized to
-    update-mode aggregations: running totals make the last-wins read
-    correct under any batch split, and the txn CAS makes re-delivery
-    a no-op — so the final rollup can carry a full hash oracle against
+    its batch id) into a transactional table (``_land_stream``).
+    Returns the landed table; the caller resolves last-wins per key by
+    batch_id. This is the ``run_streaming_tx_sink`` recipe generalized
+    to update-mode aggregations: running totals make the last-wins read
+    correct under any batch split, and the txn CAS makes re-delivery a
+    no-op — so the final rollup can carry a full hash oracle against
     the original parquet."""
-    from pulsar_project_spark.sources.txlog import (
-        tx_append_txn,
-        tx_init,
-        tx_read,
-        tx_snapshot,
-    )
+    from pulsar_project_spark.sources.txlog import tx_init, tx_read
 
-    table, ckpt = os.path.join(base, "table"), os.path.join(base, "ckpt")
+    table = os.path.join(base, "table")
     tx_init(table)
-
-    def sink(bdf: DataFrame, batch_id: int) -> None:
-        # shuffle=True: the micro-batch's input is reduce-side compute
-        # (stateful agg / applyInPandasWithState); coalesce(1) would
-        # serialize it into one task (3.5x on keep-last, round 12)
-        tx_append_txn(bdf.withColumn("batch_id", F.lit(batch_id)),
-                      table, app=app, batch=batch_id, n_files=1,
-                      shuffle=True)
-
-    def drain_once() -> None:
-        q = (
-            sdf.writeStream.outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
     with _state_partitions(spark):
-        drain_once()
-        if gate:
-            v = tx_snapshot(table)["version"]
-            drain_once()  # restart, same checkpoint: must commit nothing
-            if tx_snapshot(table)["version"] != v:
-                raise AssertionError(
-                    "checkpoint restart re-committed a batch")
-    if gate and tx_snapshot(table)["files"]:
-        # executor-crash replay: re-deliver under batch 0's txn id
-        v = tx_snapshot(table)["version"]
-        tx_append_txn(tx_read(spark, table), table, app=app, batch=0,
-                      n_files=1)
-        if tx_snapshot(table)["version"] != v:
-            raise AssertionError("replayed batch 0 was not deduplicated")
+        _land_stream(sdf, table, os.path.join(base, "ckpt"), app,
+                     mode="update", n_files=1, shuffle=True, gate=gate)
     return tx_read(spark, table)
 
 
@@ -256,7 +275,7 @@ def run_topic_frequencies(spark: SparkSession, sf_dir: str,
 
     update-mode aggregation keyed **(topic, day)** → ``foreachBatch``
     lands each batch's running totals in a transactional table via
-    txn-keyed ``tx_append_txn`` (restart + forced-replay gated, see
+    txn-keyed ``tx_append`` (restart + forced-replay gated, see
     ``_tx_landed_update_stream``) → last-wins per (topic, day) by
     batch id → all-time totals as a rollup over day rows at read.
 
@@ -305,7 +324,7 @@ def run_windowed_counts(spark: SparkSession, sf_dir: str,
     only watermark-finalized windows are emitted.
 
     Exactly-once is GATED, not assumed: each batch's finalized windows
-    land in a transactional table via txn-keyed ``tx_append_txn``; with
+    land in a transactional table via txn-keyed ``tx_append``; with
     ``gate=True`` (tests/test_streaming.py, VERDICT r11 order #1) the
     run restarts the stream against the same checkpoint (no new files →
     the table version must not move, asserted) and force-replays batch
@@ -319,11 +338,9 @@ def run_windowed_counts(spark: SparkSession, sf_dir: str,
     paths to exercise restart semantics across CALLS too (pinned by
     tests/test_streaming.py::test_windowed_counts_checkpoint_restart)."""
     from pulsar_project_spark.sources.txlog import (
-        tx_append_txn,
         tx_init,
         tx_latest_version,
         tx_read,
-        tx_snapshot,
     )
 
     base = sink_dir or tempfile.mkdtemp(prefix="win_")
@@ -344,34 +361,9 @@ def run_windowed_counts(spark: SparkSession, sf_dir: str,
         )
     )
 
-    def sink(bdf: DataFrame, batch_id: int) -> None:
-        tx_append_txn(bdf, table, app="windowed_counts", batch=batch_id,
-                      n_files=1, shuffle=True)
-
-    def drain_once() -> None:
-        q = (
-            agg.writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
     with _state_partitions(ev.sparkSession):
-        drain_once()
-        if gate:
-            v = tx_snapshot(table)["version"]
-            drain_once()  # restart, same checkpoint: must commit nothing
-            if tx_snapshot(table)["version"] != v:
-                raise AssertionError(
-                    "checkpoint restart re-committed a batch")
-    if gate and tx_snapshot(table)["files"]:
-        v = tx_snapshot(table)["version"]
-        tx_append_txn(tx_read(spark, table), table, app="windowed_counts",
-                      batch=0, n_files=1)
-        if tx_snapshot(table)["version"] != v:
-            raise AssertionError("replayed batch 0 was not deduplicated")
+        _land_stream(agg, table, ckpt, "windowed_counts", mode="append",
+                     n_files=1, shuffle=True, gate=gate)
     return tx_read(spark, table)
 
 
@@ -477,7 +469,7 @@ def run_keep_last_state(spark: SparkSession, sf_dir: str, n: int = 5,
     a compact string-encoded id list — tiny, shard-keyed by user.
 
     Round-11 oracle upgrade: each micro-batch's per-user running state
-    lands in a transactional table via txn-keyed ``tx_append_txn``
+    lands in a transactional table via txn-keyed ``tx_append``
     (restart + forced-replay gated, ``_tx_landed_update_stream``);
     last-wins per user by batch id is the final state — so the custom
     stateful operator now carries a full hash oracle (tail-of-N and
@@ -919,7 +911,7 @@ def run_streaming_tx_sink(spark: SparkSession, sf_dir: str,
                           gate: bool = False) -> DataFrame:
     """EXACTLY-ONCE streaming landing into the transactional table log
     (sources/txlog.py): each micro-batch commits as one idempotent
-    ``tx_append_txn`` keyed by (app, batchId) — Structured Streaming
+    ``tx_append(txn=...)`` keyed by (app, batchId) — Structured Streaming
     replays a failed batch with the SAME batchId, and the txn id rides
     INSIDE the manifest so the replay check and the commit share one
     atomic CAS. With ``gate=True`` (tests/test_streaming.py; VERDICT
@@ -938,7 +930,6 @@ def run_streaming_tx_sink(spark: SparkSession, sf_dir: str,
     import shutil
 
     from pulsar_project_spark.sources.txlog import (
-        tx_append_txn,
         tx_init,
         tx_read,
         tx_snapshot,
@@ -954,46 +945,16 @@ def run_streaming_tx_sink(spark: SparkSession, sf_dir: str,
     os.makedirs(base)
     tx_init(table)
 
-    app = "events_landing"
     ev = events_stream(spark, sf_dir)
     proj = ev.select(
         "event_id", "user_id", "event_type", "ts_us",
         F.round(F.col("value") * 100).cast("bigint").alias("value_cents"),
     )
-
-    def sink(bdf: DataFrame, batch_id: int) -> None:
-        # coalesce (default) is right for a pass-through landing: the
-        # upstream is a trivial projection, so narrowing 8 scan tasks
-        # to 4 writers costs less than a full-batch exchange would
-        tx_append_txn(bdf, table, app=app, batch=batch_id, n_files=4)
-
-    def drain_once() -> None:
-        q = (
-            proj.writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    drain_once()
-    if gate:
-        v_after_drain = tx_snapshot(table)["version"]
-        drain_once()  # restart, same checkpoint: no new files, no commits
-        v_after_restart = tx_snapshot(table)["version"]
-        if v_after_restart != v_after_drain:
-            raise AssertionError("restart drain committed new versions")
-        # executor-crash replay: re-deliver a commit under batch 0's txn
-        # id (the payload is irrelevant — the id already in the manifest
-        # chain MUST make the whole call a no-op)
-        if tx_snapshot(table)["files"]:
-            replay_payload = tx_read(spark, table)
-            tx_append_txn(replay_payload, table, app=app, batch=0,
-                          n_files=1)
-            if tx_snapshot(table)["version"] != v_after_restart:
-                raise AssertionError(
-                    "replayed batch 0 was not deduplicated")
+    # coalesce (no shuffle) is right for a pass-through landing: the
+    # upstream is a trivial projection, so narrowing 8 scan tasks to 4
+    # writers costs less than a full-batch exchange would
+    _land_stream(proj, table, ckpt, "events_landing", mode="append",
+                 n_files=4, gate=gate)
 
     if not tx_snapshot(table)["files"]:
         return spark.createDataFrame([], StructType([
@@ -1374,7 +1335,7 @@ def run_streaming_tx_change_feed(spark: SparkSession, sf_dir: str,
     (start, end] commit window and a replay re-reads byte-identical
     change rows. Each batch nets its weighted rows per commit and folds
     the per-(side, type) partial census into a STATE tx table via
-    ``tx_append_txn`` keyed by the batch id — the landing is
+    ``tx_append(txn=...)`` keyed by the batch id — the landing is
     exactly-once under restart by the same manifest-CAS argument the
     round-7 sink certified; ``gate=True`` (tests/test_streaming.py;
     VERDICT r11 order #1 applied round 12) proves it by draining a
@@ -1390,7 +1351,7 @@ def run_streaming_tx_change_feed(spark: SparkSession, sf_dir: str,
         TxChangeFeedDataSource,
     )
     from pulsar_project_spark.sources.txlog import (
-        tx_append_txn,
+        tx_append,
         tx_init,
         tx_read,
         tx_snapshot,
@@ -1437,8 +1398,7 @@ def run_streaming_tx_change_feed(spark: SparkSession, sf_dir: str,
         # coalesce (default) is right here: ``partial`` is a tiny
         # grouped-agg result — only the trivial reduce side merges into
         # one task; the feed scan + partial agg stay map-side parallel
-        tx_append_txn(partial, state, app="cdf_fold", batch=batch_id,
-                      n_files=1)
+        tx_append(partial, state, 1, txn=("cdf_fold", batch_id))
 
     def drain_once() -> None:
         q = (
@@ -1546,7 +1506,7 @@ def run_streaming_tx_mv(spark: SparkSession, sf_dir: str,
     DV delete / COW delete / RENAME / COW update), each micro-batch
     nets its weighted rows per commit and folds a SIGNED per-type
     partial (insert +, delete −) into a maintained aggregate tx table
-    via exactly-once ``tx_append_txn`` — with ``gate=True``
+    via exactly-once ``tx_append(txn=...)`` — with ``gate=True``
     (tests/test_streaming.py; VERDICT r11 order #1 applied round 12)
     drained twice against one checkpoint, asserting the restart
     commits nothing; the declared query drains ONCE. The final view
@@ -1567,7 +1527,7 @@ def run_streaming_tx_mv(spark: SparkSession, sf_dir: str,
         TxChangeFeedDataSource,
     )
     from pulsar_project_spark.sources.txlog import (
-        tx_append_txn,
+        tx_append,
         tx_init,
         tx_read,
         tx_snapshot,
@@ -1608,8 +1568,7 @@ def run_streaming_tx_mv(spark: SparkSession, sf_dir: str,
             .alias("cents"),
         )
         # coalesce (default): tiny grouped-agg partial, trivial reduce
-        tx_append_txn(partial, state, app="cdf_mv", batch=batch_id,
-                      n_files=1)
+        tx_append(partial, state, 1, txn=("cdf_mv", batch_id))
 
     def drain_once() -> None:
         q = (
@@ -1647,8 +1606,9 @@ def run_streaming_tx_mv(spark: SparkSession, sf_dir: str,
 def run_streaming_tx_tracked_sink(spark: SparkSession, sf_dir: str,
                                   gate: bool = False) -> DataFrame:
     """EXACTLY-ONCE streaming landing into a ROW-TRACKED tx table
-    (``tx_append_tracked_txn``): each micro-batch's rows get durable
-    ids from their very first commit, the replay of a committed batch
+    (created with ``tx_init(table, row_tracking=True)``, landed through
+    ``_land_stream``): each micro-batch's rows get durable ids from
+    their very first commit, the replay of a committed batch
     is a no-op that neither double-appends nor burns id range, and the
     census carries an ID-ALGEBRA row that makes exactly-once checkable
     by hash WITHOUT depending on how the stream split batches: if and
@@ -1665,7 +1625,6 @@ def run_streaming_tx_tracked_sink(spark: SparkSession, sf_dir: str,
     import shutil
 
     from pulsar_project_spark.sources.txlog import (
-        tx_append_tracked_txn,
         tx_init,
         tx_read_tracked,
         tx_snapshot,
@@ -1678,52 +1637,16 @@ def run_streaming_tx_tracked_sink(spark: SparkSession, sf_dir: str,
     if os.path.exists(base):
         shutil.rmtree(base)
     os.makedirs(base)
-    tx_init(table)
+    tx_init(table, row_tracking=True)
 
-    app = "events_tracked_landing"
     ev = events_stream(spark, sf_dir)
     proj = ev.select(
         "event_id", "user_id", "event_type", "ts_us",
         F.round(F.col("value") * 100).cast("bigint").alias("value_cents"),
     )
-
-    def sink(bdf: DataFrame, batch_id: int) -> None:
-        # coalesce (default): pass-through landing, trivial upstream
-        tx_append_tracked_txn(bdf, table, app=app, batch=batch_id,
-                              n_files=4)
-
-    def drain_once() -> None:
-        q = (
-            proj.writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    drain_once()
-    if gate:
-        snap0 = tx_snapshot(table)
-        drain_once()  # restart, same checkpoint: no new files, no commits
-        snap = tx_snapshot(table)
-        v_after, hwm_after = snap["version"], snap.get("row_hwm", 0)
-        if v_after != snap0["version"]:
-            raise AssertionError("restart drain committed new versions")
-        if hwm_after != snap0.get("row_hwm", 0):
-            raise AssertionError("restart drain burned id range")
-        if snap["files"]:
-            # executor-crash replay under batch 0's txn id: must be a
-            # no-op for BOTH the file list and the id high-water-mark
-            replay_payload = tx_read_tracked(spark, table).drop("_rid")
-            tx_append_tracked_txn(replay_payload, table, app=app, batch=0,
-                                  n_files=1)
-            snap2 = tx_snapshot(table)
-            if snap2["version"] != v_after:
-                raise AssertionError(
-                    "replayed batch 0 was not deduplicated")
-            if snap2.get("row_hwm", 0) != hwm_after:
-                raise AssertionError("replayed batch 0 burned id range")
+    # coalesce (no shuffle): pass-through landing, trivial upstream
+    _land_stream(proj, table, ckpt, "events_tracked_landing",
+                 mode="append", n_files=4, gate=gate)
 
     empty = StructType([
         StructField("event_type", StringType()),
@@ -1765,7 +1688,7 @@ def run_streaming_ann_ingest(spark: SparkSession, sf_dir: str,
     OFFLINE-FROZEN coarse quantizer (``kmeans_assign_to``, no
     retraining) and PQ-encoded, and the (vec_id, label, subspace,
     code) rows land in the index tx table via txn-keyed
-    ``tx_append_txn`` — exactly-once gated the standard way under
+    ``tx_append(txn=...)`` — exactly-once gated the standard way under
     ``gate=True`` (tests/test_streaming.py, VERDICT r11 order #1:
     restart against the checkpoint must commit nothing, asserted;
     batch 0's commit force-replayed must deduplicate, asserted). The
@@ -1791,7 +1714,6 @@ def run_streaming_ann_ingest(spark: SparkSession, sf_dir: str,
     from pulsar_project_spark.sources.tables import load_table
     from pulsar_project_spark.sources.txlog import (
         tx_append,
-        tx_append_txn,
         tx_init,
         tx_read,
         tx_snapshot,
@@ -1854,8 +1776,7 @@ def run_streaming_ann_ingest(spark: SparkSession, sf_dir: str,
             .select("vec_id", "embedding", "label"),
             carry=("label",),
         ).select("vec_id", "label", "subspace", "code")
-        tx_append_txn(part, idx_tbl, app=app, batch=batch_id,
-                      n_files=1, shuffle=True)
+        tx_append(part, idx_tbl, 1, shuffle=True, txn=(app, batch_id))
 
     def drain_once() -> None:
         q = (
@@ -1877,8 +1798,7 @@ def run_streaming_ann_ingest(spark: SparkSession, sf_dir: str,
                     "checkpoint restart re-committed a batch")
     if gate and tx_snapshot(idx_tbl)["files"]:
         v = tx_snapshot(idx_tbl)["version"]
-        tx_append_txn(tx_read(spark, idx_tbl), idx_tbl, app=app,
-                      batch=0, n_files=1)
+        tx_append(tx_read(spark, idx_tbl), idx_tbl, 1, txn=(app, 0))
         if tx_snapshot(idx_tbl)["version"] != v:
             raise AssertionError("replayed batch 0 was not deduplicated")
 

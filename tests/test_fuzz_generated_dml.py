@@ -29,7 +29,6 @@ pytestmark = pytest.mark.gate
 
 from pulsar_project_spark.sources.txlog import (
     tx_append,
-    tx_append_clustered,
     tx_compact,
     tx_init,
     tx_merge,
@@ -110,7 +109,7 @@ def test_generated_invariant_and_pruning_survive_random_dml(
         if kind == "append":
             tx_append(fresh(lo, n), table)
         elif kind == "append_clustered":
-            tx_append_clustered(fresh(lo, n), table, ["day"], n_files=2)
+            tx_append(fresh(lo, n), table, 2, cluster_by=["day"])
         elif kind == "update_move":
             tx_update(spark, table, "ts", lo, lo + n,
                       {"ts": "ts + 37"})

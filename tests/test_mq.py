@@ -3,7 +3,6 @@ produce → consume → aggregate → publish pipeline vs its batch twin."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
@@ -42,13 +41,6 @@ def test_roundtrip_pipeline_matches_batch(spark):
         .collect()
     }
     assert got == want
-
-
-def test_native_pulsar_path_is_gated(spark):
-    from pulsar_project_spark.sources.mq import read_pulsar_stream
-
-    with pytest.raises(NotImplementedError):
-        read_pulsar_stream(spark, "pulsar://localhost:6650", "t")
 
 
 def test_compact_topic_reduces_files_preserves_rows(spark):

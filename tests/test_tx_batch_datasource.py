@@ -15,7 +15,7 @@ from pulsar_project_spark.sources.tx_batch import (
     TxTableReader,
 )
 from pulsar_project_spark.sources.txlog import (
-    tx_append_tracked,
+    tx_append,
     tx_compact,
     tx_delete_range_dv,
     tx_init,
@@ -27,13 +27,13 @@ from pulsar_project_spark.sources.txlog import (
 @pytest.fixture()
 def table(spark):
     path = tempfile.mkdtemp(prefix="txds_")
-    tx_init(path)
+    tx_init(path, row_tracking=True)
     b1 = (spark.range(0, 10).selectExpr("id AS k", "id * 3 AS v")
           .repartition(1).sortWithinPartitions("k"))
     b2 = (spark.range(100, 110).selectExpr("id AS k", "id * 3 AS v")
           .repartition(1).sortWithinPartitions("k"))
-    tx_append_tracked(b1, path, stat_cols=["k"])
-    tx_append_tracked(b2, path, stat_cols=["k"])
+    tx_append(b1, path, stat_cols=["k"])
+    tx_append(b2, path, stat_cols=["k"])
     tx_delete_range_dv(spark, path, "k", 2, 3)
     return path
 
@@ -137,9 +137,9 @@ def test_standard_api_write_mints_ids_on_tracked_tables(registered, spark):
     from pulsar_project_spark.sources.txlog import tx_read_tracked
 
     p = _tf.mkdtemp(prefix="txds_wt_")
-    tx_init(p)
-    tx_append_tracked(
-        spark.range(5).selectExpr("id AS k", "id AS v").repartition(1), p)
+    tx_init(p, row_tracking=True)
+    tx_append(spark.range(5).selectExpr("id AS k", "id AS v").repartition(1),
+              p)
     spark.range(100, 110).selectExpr("id AS k", "id AS v").write \
         .format("tx_table").option("tableDir", p).mode("append").save()
     ids = sorted(r["_rid"] for r in tx_read_tracked(spark, p).collect())

@@ -236,7 +236,7 @@ def test_catalog_vacuum_respects_pins_and_reclaims_abandoned(spark, tmp_path):
                               (F.col("id") * 10).alias("v")),
         hot, n_files=1)
     ver = tx_latest_version(hot)
-    _commit(hot, ver, orphan, op="move-out")
+    _commit(hot, tx_snapshot(hot, ver), orphan, op="move-out")
     assert tx_latest_version(hot) == ver + 1  # abandoned branch IS latest
 
     removed = catalog_vacuum(cat, retention_seconds=0.0)

@@ -77,12 +77,12 @@ def test_cas_race_exactly_one_winner(spark, table):
     files_b = _stage_dataframe(_mk(spark, 20, 30), table, n_files=1)
     snap = tx_snapshot(table)
     assert snap["version"] == v
-    _commit(table, v, snap["files"] + files_a, op="append")
+    _commit(table, snap, snap["files"] + files_a, op="append")
     with pytest.raises(TxConflict):
-        _commit(table, v, snap["files"] + files_b, op="append")
+        _commit(table, snap, snap["files"] + files_b, op="append")
     # the loser rebases: re-read, retry at the new head
     snap2 = tx_snapshot(table)
-    _commit(table, snap2["version"], snap2["files"] + files_b, op="append")
+    _commit(table, snap2, snap2["files"] + files_b, op="append")
     assert _census(spark, table) == (30, sum(3 * i for i in range(30)))
 
 
@@ -379,13 +379,12 @@ def test_partition_evolution_prunes_both_generations(spark, table):
     on (v, id) — the pruned id-slice read must skip files in BOTH
     generations and still return exactly the slice."""
     from pulsar_project_spark.sources.txlog import (
-        tx_append_clustered,
+        tx_append,
         tx_read_pruned,
     )
 
-    tx_append_clustered(_mk(spark, 0, 400), table, ["id"], n_files=4)
-    tx_append_clustered(_mk(spark, 400, 800), table, ["v", "id"],
-                        n_files=4)
+    tx_append(_mk(spark, 0, 400), table, 4, cluster_by=["id"])
+    tx_append(_mk(spark, 400, 800), table, 4, cluster_by=["v", "id"])
     df, n_read, n_total = tx_read_pruned(spark, table, "id", 100, 199)
     assert n_total == 8
     assert n_read < n_total          # pruning actually skipped files
@@ -407,11 +406,11 @@ def test_partition_evolution_prunes_both_generations(spark, table):
 def test_txn_idempotency_survives_compaction_and_vacuum(spark, table):
     """ADVICE r7: a streaming batch replay after compaction+vacuum must
     still be detected — the (app, batch) ids of dropped manifests fold
-    into the sidecar, so tx_append_txn stays a no-op forever."""
-    from pulsar_project_spark.sources.txlog import tx_append_txn, tx_txn_version
+    into the sidecar, so a txn-keyed tx_append stays a no-op forever."""
+    from pulsar_project_spark.sources.txlog import tx_append, tx_txn_version
 
-    tx_append_txn(_mk(spark, 0, 60), table, app="st", batch=0, n_files=4)
-    tx_append_txn(_mk(spark, 60, 100), table, app="st", batch=1, n_files=4)
+    tx_append(_mk(spark, 0, 60), table, 4, txn=("st", 0))
+    tx_append(_mk(spark, 60, 100), table, 4, txn=("st", 1))
     tx_compact(spark, table, target_bytes=1 << 30)
     tx_vacuum(table, retention_seconds=0.0)
     # both txn manifests are gone; the sidecar still answers
@@ -419,7 +418,7 @@ def test_txn_idempotency_survives_compaction_and_vacuum(spark, table):
     assert tx_txn_version(table, "st", 1) is not None
     before = tx_snapshot(table)["version"]
     census = _census(spark, table)
-    tx_append_txn(_mk(spark, 0, 60), table, app="st", batch=0, n_files=1)
+    tx_append(_mk(spark, 0, 60), table, 1, txn=("st", 0))
     assert tx_snapshot(table)["version"] == before  # replay = no-op
     assert _census(spark, table) == census
 
@@ -621,14 +620,14 @@ def test_restore_carries_dvs(spark, table):
 
 def test_history_describes_every_surviving_commit(spark, table):
     from pulsar_project_spark.sources.txlog import (
-        tx_append_txn,
+        tx_append,
         tx_delete_range_dv,
         tx_history,
         tx_restore,
     )
 
     tx_append(_mk(spark, 0, 50), table, n_files=2)              # v1
-    tx_append_txn(_mk(spark, 50, 70), table, "st", 0, n_files=1)  # v2
+    tx_append(_mk(spark, 50, 70), table, 1, txn=("st", 0))  # v2
     tx_delete_range_dv(spark, table, "id", 0, 9)                # v3
     tx_compact(spark, table, target_bytes=1 << 30)              # v4
     tx_restore(table, 2)                                        # v5
@@ -816,14 +815,14 @@ def test_bloom_point_lookup_skips_files_bounds_cannot(spark, table):
     from pyspark.sql import functions as F
 
     from pulsar_project_spark.sources.txlog import (
-        tx_append_bloomed,
+        tx_append,
         tx_read_bloom_point,
     )
 
     # hash-scatter 4000 ids over 8 files: every file spans ~the whole
     # range, so min/max bounds prune NOTHING — only the bloom can skip
     df = spark.range(4000).selectExpr("id", "id * 7 AS v")
-    tx_append_bloomed(df.repartition(8, "id"), table, "id")
+    tx_append(df.repartition(8, "id"), table, bloom_col="id")
     snap = tx_snapshot(table)
     stats = snap["stats"]
     assert all("__bloom__id" in stats[n] and "id" in stats[n]
@@ -846,12 +845,12 @@ def test_bloom_point_lookup_skips_files_bounds_cannot(spark, table):
 
 def test_bloom_carries_through_kept_files_and_drops_on_rewrite(spark, table):
     from pulsar_project_spark.sources.txlog import (
-        tx_append_bloomed,
+        tx_append,
         tx_delete_range,
         tx_read_bloom_point,
     )
 
-    tx_append_bloomed(_mk(spark, 0, 1000), table, "id", n_files=4)
+    tx_append(_mk(spark, 0, 1000), table, 4, bloom_col="id")
     # COW delete far outside most files: kept files keep their blooms
     tx_delete_range(spark, table, "id", 0, 10)
     snap = tx_snapshot(table)
@@ -870,11 +869,11 @@ def test_bloom_carries_through_kept_files_and_drops_on_rewrite(spark, table):
 
 def test_bloom_never_false_negative_exhaustive(spark, table):
     from pulsar_project_spark.sources.txlog import (
-        tx_append_bloomed,
+        tx_append,
         tx_read_bloom_point,
     )
 
-    tx_append_bloomed(_mk(spark, 0, 300), table, "id", n_files=4)
+    tx_append(_mk(spark, 0, 300), table, 4, bloom_col="id")
     out, _, _ = tx_read_bloom_point(spark, table, "id", list(range(300)))
     assert out.count() == 300  # every stored needle found
 
@@ -932,14 +931,13 @@ def test_mixed_ops_concurrent_writers_serialize(spark, table):
 
 def test_compaction_rebuilds_blooms_on_outputs(spark, table):
     from pulsar_project_spark.sources.txlog import (
-        tx_append_bloomed,
+        tx_append,
         tx_read_bloom_point,
     )
 
     for i in range(3):
-        tx_append_bloomed(
-            _mk(spark, i * 1000, i * 1000 + 1000).repartition(2, "id"),
-            table, "id")
+        tx_append(_mk(spark, i * 1000, i * 1000 + 1000).repartition(2, "id"),
+                  table, bloom_col="id")
     tx_compact(spark, table, target_bytes=1 << 26)  # everything merges
     snap = tx_snapshot(table)
     assert snap["op"] == "compact"
@@ -958,7 +956,7 @@ def test_check_constraints_enforced_on_every_writer(spark, table):
 
     from pulsar_project_spark.sources.txlog import (
         TxConstraintViolation,
-        tx_append_txn,
+        tx_append,
         tx_constraints,
         tx_drop_constraint,
         tx_merge_upsert,
@@ -975,8 +973,8 @@ def test_check_constraints_enforced_on_every_writer(spark, table):
         tx_append(spark.createDataFrame([(500, -1)], "id: long, v: long"),
                   table)
     with pytest.raises(TxConstraintViolation):
-        tx_append_txn(spark.createDataFrame([(501, 0)], "id: long, v: long"),
-                      table, app="t", batch=1)
+        tx_append(spark.createDataFrame([(501, 0)], "id: long, v: long"),
+                  table, txn=("t", 1))
     with pytest.raises(TxConstraintViolation):
         tx_merge_upsert(
             spark, table,
@@ -1016,14 +1014,14 @@ def test_add_constraint_validates_existing_data(spark, table):
 
 def test_optimize_zorder_rebuilds_blooms(spark, table):
     from pulsar_project_spark.sources.txlog import (
-        tx_append_bloomed,
+        tx_append,
         tx_optimize_zorder,
         tx_read_bloom_point,
     )
 
     grid = spark.range(2000).selectExpr(
         "id % 64 AS a", "id div 64 AS b", "id AS v")
-    tx_append_bloomed(grid.repartition(4, "v"), table, "v")
+    tx_append(grid.repartition(4, "v"), table, bloom_col="v")
     tx_optimize_zorder(spark, table, "a", "b", n_files=4)
     snap = tx_snapshot(table)
     assert snap["op"] == "optimize-zorder"
@@ -1036,13 +1034,13 @@ def test_optimize_zorder_rebuilds_blooms(spark, table):
 
 def test_tx_detail_reflects_snapshot_metadata(spark, table):
     from pulsar_project_spark.sources.txlog import (
-        tx_append_bloomed,
+        tx_append,
         tx_delete_range_dv,
         tx_detail,
     )
 
     tx_append(_mk(spark, 0, 100), table, n_files=2)
-    tx_append_bloomed(_mk(spark, 100, 200), table, "id", n_files=2)
+    tx_append(_mk(spark, 100, 200), table, 2, bloom_col="id")
     tx_delete_range_dv(spark, table, "id", 0, 9)
     d = {r["file"]: r for r in tx_detail(spark, table).collect()}
     snap = tx_snapshot(table)
@@ -1228,7 +1226,7 @@ def test_optimize_and_compact_rebuild_blooms_after_rename_drop(spark, table):
     # OPTIMIZE permanently broken after RENAME/DROP COLUMN
     from pulsar_project_spark.sources.txlog import (
         _BLOOM_PREFIX,
-        tx_append_bloomed,
+        tx_append,
         tx_drop_column,
         tx_optimize_zorder,
         tx_read_bloom_point,
@@ -1237,7 +1235,7 @@ def test_optimize_and_compact_rebuild_blooms_after_rename_drop(spark, table):
 
     df = spark.range(200).selectExpr(
         "id AS k", "id * 2 AS v", "id % 7 AS scratch")
-    tx_append_bloomed(df, table, "k", n_files=2)
+    tx_append(df, table, 2, bloom_col="k")
     tx_rename_column(table, "k", "key")
     tx_drop_column(table, "scratch")
     tx_compact(spark, table, target_bytes=1 << 30)  # merges both files
@@ -1263,8 +1261,8 @@ def test_constraint_added_mid_write_binds_via_retry(spark, table,
     orig = tl._stage_dataframe
     fired = {"done": False}
 
-    def staged(df, tbl, n_files=None):
-        out = orig(df, tbl, n_files)
+    def staged(df, tbl, *args, **kwargs):
+        out = orig(df, tbl, *args, **kwargs)
         if not fired["done"]:
             fired["done"] = True
             tl.tx_set_constraint(spark, tbl, "v_pos", "v > 0")
@@ -1281,31 +1279,30 @@ def test_bloom_probe_and_column_types_validated(spark, table):
     # ADVICE r8 low: a float probe str()-hashes differently from the
     # stored int → silent false negative; now an explicit TypeError
     from pulsar_project_spark.sources.txlog import (
-        tx_append_bloomed, tx_read_bloom_point,
+        tx_append, tx_read_bloom_point,
     )
 
-    tx_append_bloomed(spark.range(10).selectExpr("id AS k", "id AS v"),
-                      table, "k", n_files=1)
+    tx_append(spark.range(10).selectExpr("id AS k", "id AS v"), table, 1,
+              bloom_col="k")
     with pytest.raises(TypeError, match="only int and str"):
         tx_read_bloom_point(spark, table, "k", [5.0])
     with pytest.raises(TypeError, match="only int and str"):
-        tx_append_bloomed(
-            spark.range(10).selectExpr("cast(id AS double) AS f"),
-            table, "f", n_files=1)
+        tx_append(spark.range(10).selectExpr("cast(id AS double) AS f"), table,
+                  1, bloom_col="f")
 
 
 def test_pruned_read_resolves_rename_chain(spark, table):
     # VERDICT r8 order #1: bounds recorded under the physical
     # (pre-rename) name must keep skipping under the logical name
     from pulsar_project_spark.sources.txlog import (
-        tx_append_clustered, tx_read_pruned, tx_rename_column,
+        tx_append, tx_read_pruned, tx_rename_column,
     )
 
     gen1 = spark.range(100).selectExpr("id AS a", "id * 2 AS x")
-    tx_append_clustered(gen1, table, ["a"], n_files=4)
+    tx_append(gen1, table, 4, cluster_by=["a"])
     tx_rename_column(table, "a", "b")
     gen2 = spark.range(100, 200).selectExpr("id AS b", "id * 2 AS x")
-    tx_append_clustered(gen2, table, ["b"], n_files=4)
+    tx_append(gen2, table, 4, cluster_by=["b"])
     out, n_read, n_total = tx_read_pruned(spark, table, "b", 0, 24)
     assert n_total == 8
     assert n_read <= 2, "pre-rename generation must PRUNE, not scan"
@@ -1314,13 +1311,11 @@ def test_pruned_read_resolves_rename_chain(spark, table):
 
 def test_pre_rename_bloom_still_skips(spark, table):
     from pulsar_project_spark.sources.txlog import (
-        tx_append_bloomed, tx_read_bloom_point, tx_rename_column,
+        tx_append, tx_read_bloom_point, tx_rename_column,
     )
 
-    tx_append_bloomed(
-        spark.range(1000).selectExpr("id AS a", "id AS v")
-        .repartition(4, "a"),
-        table, "a", n_files=None)
+    tx_append(spark.range(1000).selectExpr("id AS a", "id AS v")
+              .repartition(4, "a"), table, bloom_col="a")
     tx_rename_column(table, "a", "b")
     got, n_read, n_total = tx_read_bloom_point(spark, table, "b", [17])
     assert n_total == 4 and n_read < n_total
@@ -1364,11 +1359,11 @@ def test_widen_then_filter_pushdown_and_pruning(spark, table):
     # (recorded pre-widen) and parquet predicate pushdown under
     # scan-level type promotion
     from pulsar_project_spark.sources.txlog import (
-        tx_append_clustered, tx_read_pruned, tx_widen_column,
+        tx_append, tx_read_pruned, tx_widen_column,
     )
 
     df = spark.range(100).selectExpr("cast(id AS int) AS v", "id AS k")
-    tx_append_clustered(df, table, ["v"], n_files=4)
+    tx_append(df, table, 4, cluster_by=["v"])
     tx_widen_column(table, "v", "bigint")
     out, n_read, n_total = tx_read_pruned(spark, table, "v", 0, 24)
     assert n_total == 4 and n_read <= 2
@@ -1448,11 +1443,11 @@ def test_manifest_records_schema_union_plans_without_footers(spark, table,
 def test_schema_union_survives_clone_and_stays_stable_on_pruned_reads(
         spark, table):
     from pulsar_project_spark.sources.txlog import (
-        tx_append_clustered, tx_clone, tx_read_pruned, tx_widen_column,
+        tx_append, tx_clone, tx_read_pruned, tx_widen_column,
     )
 
     df = spark.range(100).selectExpr("cast(id AS int) AS v", "id AS k")
-    tx_append_clustered(df, table, ["v"], n_files=4)
+    tx_append(df, table, 4, cluster_by=["v"])
     tx_widen_column(table, "v", "bigint")
     dst = tempfile.mkdtemp(prefix="txclone_")
     tx_clone(table, dst)
@@ -1528,12 +1523,11 @@ def test_merge_conditional_rejects_both_clauses_and_dup_keys(spark, table):
 
 def test_merge_conditional_targets_only_overlapping_files(spark, table):
     from pulsar_project_spark.sources.txlog import (
-        tx_append_clustered, tx_merge,
+        tx_append, tx_merge,
     )
 
-    tx_append_clustered(
-        spark.range(1000).selectExpr("id AS k", "id AS v"),
-        table, ["k"], n_files=8)
+    tx_append(spark.range(1000).selectExpr("id AS k", "id AS v"), table, 8,
+              cluster_by=["k"])
     before = set(tx_snapshot(table)["files"])
     tx_merge(spark, table,
              spark.range(10, 20).selectExpr("id AS k", "id * 2 AS v"),
@@ -1585,7 +1579,7 @@ def test_reorg_purge_retires_all_mapping_debt(spark, table):
     import pyarrow.parquet as papq
 
     from pulsar_project_spark.sources.txlog import (
-        tx_append_clustered,
+        tx_append,
         tx_delete_range_dv,
         tx_drop_column,
         tx_rename_column,
@@ -1593,15 +1587,15 @@ def test_reorg_purge_retires_all_mapping_debt(spark, table):
         tx_widen_column,
     )
 
-    tx_append_clustered(spark.range(10).selectExpr(
+    tx_append(spark.range(10).selectExpr(
         "cast(id AS int) AS a", "id AS k", "id % 3 AS scratch"),
-        table, ["k"], n_files=1)                            # narrow+extra
+        table, 1, cluster_by=["k"])                         # narrow+extra
     tx_drop_column(table, "scratch")
     tx_rename_column(table, "a", "b")
     tx_widen_column(table, "b", "bigint")
-    tx_append_clustered(spark.range(10, 20).selectExpr(
-        "cast(id AS bigint) AS b", "id AS k"), table,
-        ["k"], n_files=1)                                   # clean gen
+    tx_append(spark.range(10, 20).selectExpr(
+        "cast(id AS bigint) AS b", "id AS k"),
+        table, 1, cluster_by=["k"])                         # clean gen
     # k-bounds make the DV delete target ONLY the narrow generation —
     # the clean file must stay DV-free and carry by name through reorg
     tx_delete_range_dv(spark, table, "k", 0, 2)             # DV debt
@@ -1633,14 +1627,14 @@ def test_reorg_purge_retires_all_mapping_debt(spark, table):
 def test_reorg_purge_rebuilds_blooms_and_stats_logical(spark, table):
     from pulsar_project_spark.sources.txlog import (
         _BLOOM_PREFIX,
-        tx_append_bloomed,
+        tx_append,
         tx_read_bloom_point,
         tx_rename_column,
         tx_reorg_purge,
     )
 
-    tx_append_bloomed(spark.range(500).selectExpr("id AS a", "id AS v"),
-                      table, "a", n_files=2)
+    tx_append(spark.range(500).selectExpr("id AS a", "id AS v"), table, 2,
+              bloom_col="a")
     tx_rename_column(table, "a", "key")
     tx_reorg_purge(spark, table)
     snap = tx_snapshot(table)
@@ -1662,3 +1656,85 @@ def test_widen_float_to_double_end_to_end(spark, table):
     # halves are exactly representable: float->double promotion is
     # value-exact, so the sum is bit-deterministic
     assert got.agg({"f": "sum"}).first()[0] == sum(i * 0.5 for i in range(8))
+
+
+# --- one append, every option ------------------------------------------------
+
+_APPEND_OPTIONS = {
+    "plain": ({}, "append"),
+    "txn": ({"txn": ("matrix", 7)}, "append"),
+    "cluster_by": ({"n_files": 2, "cluster_by": ["id"]}, "append-clustered"),
+    "bloom_col": ({"bloom_col": "id"}, "append-bloomed"),
+    "stat_cols": ({"stat_cols": ["id"]}, "append"),
+}
+
+
+@pytest.mark.parametrize("tracked", [False, True],
+                         ids=["dv_table", "tracked_table"])
+@pytest.mark.parametrize("option", sorted(_APPEND_OPTIONS))
+def test_append_matrix_keeps_deletes_and_mints_ids(spark, tmp_path, option,
+                                                   tracked):
+    """Every append option against a table holding a deletion vector,
+    untracked and row-tracked: rows deleted before the append stay
+    deleted, a tracked table's new ids continue contiguously from its
+    row_hwm (old ids untouched), and the manifest op names the shape."""
+    from pulsar_project_spark.sources.txlog import (
+        tx_delete_range_dv,
+        tx_read_tracked,
+    )
+
+    path = str(tmp_path / "t")
+    tx_init(path, row_tracking=tracked)
+    tx_append(_mk(spark, 0, 6).repartition(1).sortWithinPartitions("id"),
+              path)
+    tx_delete_range_dv(spark, path, "id", 1, 2)
+    hwm = tx_snapshot(path).get("row_hwm")
+    kwargs, op = _APPEND_OPTIONS[option]
+    tx_append(_mk(spark, 100, 102), path, **kwargs)
+    snap = tx_snapshot(path)
+    assert snap["op"] == op
+    got = sorted(r["id"] for r in tx_read(spark, path).collect())
+    assert got == [0, 3, 4, 5, 100, 101]
+    if tracked:
+        ids = {r["id"]: r["_rid"]
+               for r in tx_read_tracked(spark, path).collect()}
+        assert {k: ids[k] for k in (0, 3, 4, 5)} == {0: 0, 3: 3, 4: 4, 5: 5}
+        assert sorted(ids[k] for k in (100, 101)) == [hwm, hwm + 1]
+        assert snap["row_hwm"] == hwm + 2
+    else:
+        assert "row_hwm" not in snap and "rids" not in snap
+
+
+_TABLE_META_SAMPLES = {
+    "constraints": {"nonneg": "id >= 0"},
+    "renames": [["v", "w"]],
+    "drops": ["scratch"],
+    "types": {"v": "bigint"},
+    "schema": {"id": "bigint", "v": "bigint"},
+    "generated": {"bucket": {"base": "id", "div": 10}},
+    "row_hwm": 7,
+}
+
+
+@pytest.mark.parametrize("key", sorted(_TABLE_META_SAMPLES))
+def test_commit_inherits_parent_metadata(tmp_path, key):
+    """The one carry-forward rule: a commit that passes no metadata
+    keeps every table-metadata key of its parent unchanged, and its
+    per-file maps lose exactly the entries of the files it removed."""
+    table = str(tmp_path / "t")
+    tx_init(table)
+    files = ["a.parquet", "b.parquet", "c.parquet"]
+    maps = {"stats": {f: {"id": [i, i]} for i, f in enumerate(files)},
+            "dvs": {"a.parquet": "dv0.parquet", "b.parquet": "dv1.parquet"},
+            "rids": {f: 10 * i for i, f in enumerate(files)}}
+    sample = _TABLE_META_SAMPLES[key]
+    v = _commit(table, tx_snapshot(table), files, op="seed",
+                **{key: sample}, **maps)
+    parent = tx_snapshot(table, v)
+    assert parent[key] == sample
+    _commit(table, parent, ["a.parquet", "c.parquet"], op="drop-b")
+    child = tx_snapshot(table)
+    assert child[key] == sample
+    for m in maps:
+        assert child[m] == {f: e for f, e in parent[m].items()
+                            if f != "b.parquet"}

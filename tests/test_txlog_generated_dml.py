@@ -18,8 +18,6 @@ import pytest
 from pulsar_project_spark.sources.txlog import (
     TxConstraintViolation,
     tx_append,
-    tx_append_clustered,
-    tx_append_txn,
     tx_compact,
     tx_drop_column,
     tx_drop_generated,
@@ -52,7 +50,7 @@ def _conforms(spark, table):
 def _seed(spark, table, lo=0, hi=1000, files=5):
     tx_set_generated(table, "day", "ts", 100)
     ev = spark.range(lo, hi).selectExpr("id AS ts", "id * 2 AS v")
-    tx_append_clustered(ev, table, ["day"], n_files=files)
+    tx_append(ev, table, files, cluster_by=["day"])
 
 
 # --- UPDATE ---------------------------------------------------------------
@@ -119,12 +117,12 @@ def test_merge_upsert_missing_table_column_fails_loudly(spark, table):
         tx_merge_upsert(spark, table, ups, "ts")
 
 
-def test_merge_upsert_missing_column_fails_loudly_tracked(spark, table):
-    from pulsar_project_spark.sources.txlog import tx_append_tracked
-
+def test_merge_upsert_missing_column_fails_loudly_tracked(spark):
+    table = tempfile.mkdtemp(prefix="txgen_tracked_")
+    tx_init(table, row_tracking=True)
     ev = spark.range(0, 100).selectExpr("id AS ts", "id AS v",
                                         "id % 3 AS extra")
-    tx_append_tracked(ev, table)
+    tx_append(ev, table)
     ups = spark.range(10, 20).selectExpr("id AS ts", "id * 7 AS v")
     with pytest.raises(ValueError, match="lack table column"):
         tx_merge_upsert(spark, table, ups, "ts")
@@ -160,12 +158,12 @@ def test_merge_inserts_compute_generated(spark, table):
 def test_append_txn_computes_and_validates_generated(spark, table):
     tx_set_generated(table, "day", "ts", 100)
     ok = spark.range(0, 50).selectExpr("id AS ts", "id AS v")
-    tx_append_txn(ok, table, app="job", batch=1)
+    tx_append(ok, table, txn=("job", 1))
     _conforms(spark, table)
     bad = spark.range(50, 60).selectExpr("id AS ts", "id AS v",
                                          "id AS day")
     with pytest.raises(TxConstraintViolation, match="generated column"):
-        tx_append_txn(bad, table, app="job", batch=2)
+        tx_append(bad, table, txn=("job", 2))
 
 
 # --- declaration over existing data -----------------------------------------
@@ -194,9 +192,8 @@ def test_rewrite_mixing_null_generated_never_derive_prunes_rows(
               table)
     tx_set_generated(table, "day", "ts", 100)
     # era 2: conforming rows in a far bucket, stats on day
-    tx_append_clustered(
-        spark.range(500, 1000).selectExpr("id AS ts", "id AS v"),
-        table, ["day"], n_files=1)
+    tx_append(spark.range(500, 1000).selectExpr("id AS ts", "id AS v"), table,
+              1, cluster_by=["day"])
     # compaction mixes both eras into files whose non-null day bounds
     # ([5,9]) are DISJOINT from the derived range for ts in [100,199]
     # (day 1) — without the null guard on generated-column stats the
@@ -212,9 +209,8 @@ def test_rewrite_mixing_null_generated_never_derive_prunes_rows(
     # and a NEW file containing ONLY conforming rows still records day
     # bounds and still prunes: era 3 lands in day bucket 20, then a
     # probe on the day-1 base range must skip it via the derived check.
-    tx_append_clustered(
-        spark.range(2000, 2100).selectExpr("id AS ts", "id AS v"),
-        table, ["day"], n_files=1)
+    tx_append(spark.range(2000, 2100).selectExpr("id AS ts", "id AS v"), table,
+              1, cluster_by=["day"])
     snap = tx_snapshot(table)
     with_day = [n for n, s in snap["stats"].items() if "day" in s]
     assert len(with_day) == 1, snap["stats"]

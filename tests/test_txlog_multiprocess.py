@@ -6,7 +6,7 @@ same snapshot→commit→TxConflict-rebase loop every DML uses; the test
 then replays the full manifest history and asserts linearizability
 (every version adds exactly one file on top of its parent, nothing ever
 lost) and exactly-once landing of every row. A second soak races the
-writer-transaction idempotency key (the ``tx_append_txn`` dance,
+writer-transaction idempotency key (the txn-keyed ``tx_append`` dance,
 txlog.py) across processes: exactly one body commits per (app, batch).
 """
 
@@ -57,7 +57,7 @@ for i in range(K):
     for _ in range(2000):  # the tx_append rebase loop, uncapped-ish
         snap = tx_snapshot(table)
         try:
-            v = _commit(table, snap["version"], snap["files"] + [name],
+            v = _commit(table, snap, snap["files"] + [name],
                         op="append")
             committed.append(v)
             break
@@ -91,7 +91,7 @@ for _ in range(2000):
         break  # replay lost: staged file stays an orphan
     snap = tx_snapshot(table)
     try:
-        _commit(table, snap["version"], snap["files"] + [name],
+        _commit(table, snap, snap["files"] + [name],
                 op="append", txn={{"app": "soak-app", "batch": 1}})
         won = True
         break
