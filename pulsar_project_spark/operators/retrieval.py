@@ -5,7 +5,7 @@ Re-expresses ``simple_rag`` (reference ``utils.py:326-330``) and its parts
 ``get_top_k_records`` :318-324) as one declarative DataFrame plan:
 
     clean(query) → keywords                          (driver-side constant)
-    clean(corpus.text)                               (projection, codegen)
+    clean(corpus.text)                               (once per loaded table)
     score = |{kw : kw substring-of cleaned}|         (higher-order filter)
     top-k by (score desc, doc_id asc)                (TakeOrderedAndProject)
 
@@ -17,8 +17,16 @@ Semantics kept faithful on purpose:
 * ties resolve by original record order — Python's stable sort — which is
   the ``doc_id asc`` tiebreak here (utils.py:322; SURVEY.md §7.2).
 
+Cleaning the corpus does not depend on the query, so for a table that
+``load_table`` returned the cleaned ``(id, cleaned)`` relation is built
+once per session and kept in memory (``tables.cached_derivation``); each
+lookup scans that relation and computes only the query's keyword
+counts. Any other corpus (a filtered or limited table, an in-memory
+frame) is cleaned inside the lookup's own plan, as before.
+
 Scale shape: the scan is embarrassingly parallel (no shuffle — score is a
-per-row projection); the global top-k is Spark's TakeOrderedAndProject,
+per-row projection over InMemoryTableScan, or over the parquet scan for
+an uncached corpus); the global top-k is Spark's TakeOrderedAndProject,
 i.e. a per-partition heap of k followed by a k·partitions merge on the
 driver — no full sort, no full shuffle, holds at any corpus size for
 small k. Keywords ride along as a literal array (a broadcast of a
@@ -27,6 +35,8 @@ handful of strings).
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -34,6 +44,7 @@ from pulsar_project_spark.functions.text import (
     COMMON_ENGLISH_WORDS,
     clean_string,
 )
+from pulsar_project_spark.sources.tables import cached_derivation
 
 
 def extract_query_keywords(query: str) -> list[str]:
@@ -41,30 +52,34 @@ def extract_query_keywords(query: str) -> list[str]:
     clean_string → tokenize → stopword drop (utils.py:326-329). The query
     is a scalar, so this runs once, not per row — the per-row work stays
     JVM-side."""
-    import re
-
     cleaned = re.sub(r"[^\w\s]", "", query.lower())
     return [t for t in cleaned.split() if t and t not in COMMON_ENGLISH_WORDS]
 
 
-def keyword_score(text_col: Column | str, kws: list[str]) -> Column:
+def keyword_score(cleaned_col: str, kws: list[str]) -> Column:
     """Substring-containment score (utils.py:254-259): number of keywords
-    contained in clean_string(text). Pure built-ins → codegen'd."""
-    cleaned = clean_string(text_col)
+    contained in the already-cleaned text column ``cleaned_col``. One SQL
+    expression parsed in the JVM, so no Python lambda is traced per
+    call; codegen'd built-ins only."""
     if not kws:
         return F.lit(0)
-    kw_arr = F.array(*[F.lit(k) for k in kws])
-    return F.size(F.filter(kw_arr, lambda kw: F.contains(cleaned, kw)))
+    # extract_query_keywords leaves only \w characters, so a keyword can
+    # never close the string literal it is inlined into
+    if not all(re.fullmatch(r"\w+", k) for k in kws):
+        raise ValueError(f"keywords must be \\w-only: {kws!r}")
+    arr = ", ".join(f"'{k}'" for k in kws)
+    return F.expr(f"size(filter(array({arr}), kw -> contains(`{cleaned_col}`, kw)))")
 
 
 def score_corpus(corpus: DataFrame, query: str,
                  id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Full scored relation: every row with its keyword-overlap score."""
     kws = extract_query_keywords(query)
-    return corpus.select(
-        F.col(id_col),
-        keyword_score(F.col(text_col), kws).alias("score"),
-    )
+    cleaned = cached_derivation(
+        corpus, f"cleaned:{id_col}:{text_col}",
+        lambda df: df.select(F.col(id_col),
+                             clean_string(F.col(text_col)).alias("cleaned")))
+    return cleaned.select(F.col(id_col), keyword_score("cleaned", kws).alias("score"))
 
 
 def simple_rag(corpus: DataFrame, query: str, top_k: int = 5,
@@ -74,6 +89,9 @@ def simple_rag(corpus: DataFrame, query: str, top_k: int = 5,
     top_k default 5 = the reference's function default (utils.py:326).
     Returns (doc_id, score) ordered (score desc, doc_id asc) — the stable
     tiebreak REQUIRED for parity with Python's list.sort (utils.py:322).
+
+    Plan shape over a ``load_table`` corpus: InMemoryTableScan (the
+    cached cleaned corpus) → Project (score) → TakeOrderedAndProject.
     """
     scored = score_corpus(corpus, query, id_col=id_col, text_col=text_col)
     return scored.orderBy(F.desc("score"), F.asc(id_col)).limit(top_k)

@@ -16,9 +16,13 @@ checkpoints is the deliberate replacement, not a translation).
 from __future__ import annotations
 
 import os
+import threading
+import uuid
 import weakref
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 TABLE_NAMES = (
     "region", "nation", "customer", "supplier", "part",
@@ -37,21 +41,70 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-# Session-scoped LAZY-PLAN cache (round 13, guide §1.2): building a
-# parquet-backed DataFrame costs ~100 ms of DRIVER metadata work per
-# call (DataFrameReader py4j round trips, file listing, footer schema
-# inference) — paid on every query construction, 2x per query in the
-# steady bench, ~1-3 tables per query. The cache memoizes the immutable
-# LOGICAL PLAN object per (session, realpath, mtime_ns, size): no rows,
-# no results — every action on the cached DataFrame re-scans the
-# parquet exactly as a fresh read would (this is the same class of
-# driver-side metadata reuse as Spark's own per-session
-# FileStatusCache, extended to the DataFrame wrapper). The mtime/size
-# key invalidates on corpus regeneration; the WeakKeyDictionary ties
-# entry lifetime to the owning session so a stopped session can never
-# serve a stale plan to its successor.
+# Session-scoped table cache. Building a parquet-backed DataFrame costs
+# ~100 ms of DRIVER metadata work per call (reader py4j round trips, file
+# listing, footer schema inference), paid on every query construction,
+# so ``_cached_plan`` memoizes the LOGICAL PLAN of each loaded table. Two
+# things are cached per entry:
+#
+# * the lazy plan, as its JVM Dataset handle: no rows; an action on it
+#   re-scans the parquet exactly as a fresh read would;
+# * relations DERIVED from that plan (``cached_derivation``), such as the
+#   cleaned text the keyword scorers read. These hold data: each is
+#   persisted and materialized once, then read from the block manager.
+#
+# The key is (tag, realpath, mtime_ns, size), so a rewritten file misses
+# and gets a new entry. A derived relation carries a literal that is
+# unique to its entry, because Spark's CacheManager is shared by every
+# session and matches plans by result, and a parquet relation compares
+# equal by path alone: without the literal a DIRECT ``spark.read.parquet``
+# of the rewritten file, or another session's read, would be served the
+# old rows. With it no plan outside this entry can match.
+#
+# Entries are released (derived relations unpersisted) when a derivation
+# is built and their file is gone or changed, and when the session is
+# garbage collected. Entries hold JVM handles, never the Python session,
+# so the weak session key can actually die (a cached DataFrame would pin
+# its session and the entry would live forever).
 _PLAN_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
     weakref.WeakKeyDictionary())
+_VIEWS: "weakref.WeakKeyDictionary[SparkSession, tuple]" = (
+    weakref.WeakKeyDictionary())
+
+_STAMP = "_cache_entry"
+_DERIVE_LOCK = threading.Lock()  # one build per entry and tag, one sweep at a time
+
+
+class _Entry:
+    """One cached table: the plan's JVM Dataset and, per derivation tag,
+    the (persisted, stamp-dropped view) JVM Datasets built from it."""
+
+    __slots__ = ("jdf", "derived")
+
+    def __init__(self, jdf):
+        self.jdf = jdf
+        self.derived: dict = {}
+
+    def release(self) -> None:
+        for persisted, _ in self.derived.values():
+            try:
+                persisted.unpersist(False)
+            except Py4JError:  # its context was stopped: nothing left to free
+                pass
+        self.derived.clear()
+
+
+def _release_all(per_session: dict) -> None:
+    for entry in per_session.values():
+        entry.release()
+
+
+def _session_cache(spark: SparkSession) -> dict:
+    per_session = _PLAN_CACHE.get(spark)
+    if per_session is None:
+        per_session = _PLAN_CACHE[spark] = {}
+        weakref.finalize(spark, _release_all, per_session).atexit = False
+    return per_session
 
 
 def _cached_plan(spark: SparkSession, path: str, tag: str, build):
@@ -60,12 +113,49 @@ def _cached_plan(spark: SparkSession, path: str, tag: str, build):
     except OSError:
         return build()  # absent/racing path: never cache
     key = (tag, os.path.realpath(path), st.st_mtime_ns, st.st_size)
-    per_session = _PLAN_CACHE.setdefault(spark, {})
-    df = per_session.get(key)
-    if df is None:
-        df = build()
-        per_session[key] = df
-    return df
+    per_session = _session_cache(spark)
+    entry = per_session.get(key)
+    if entry is None:
+        entry = per_session[key] = _Entry(build()._jdf)
+    return DataFrame(entry.jdf, spark)
+
+
+def _is_stale(key: tuple) -> bool:
+    try:
+        st = os.stat(key[1])
+    except OSError:
+        return True
+    return (st.st_mtime_ns, st.st_size) != key[2:]
+
+
+def cached_derivation(df: DataFrame, tag: str, build) -> DataFrame:
+    """``build(df)``, persisted once per cached table plan.
+
+    Applies only when ``df`` is a DataFrame ``_cached_plan`` handed out
+    (a ``load_table`` / ``load_events`` result, matched by identity):
+    the first call persists and materializes ``build(df)`` in that
+    table's entry, later calls read it back. Any other DataFrame (a
+    filtered or limited table, ``createDataFrame``) gets ``build(df)``
+    lazily and is never persisted. ``build`` must be a pure function of
+    the table's rows and of ``tag``.
+    """
+    spark = df.sparkSession
+    per_session = _PLAN_CACHE.get(spark, {})
+    key = next((k for k, e in list(per_session.items()) if e.jdf is df._jdf), None)
+    if key is None:
+        return build(df)
+    entry = per_session[key]
+    with _DERIVE_LOCK:
+        if tag not in entry.derived:
+            for k in [k for k in list(per_session) if _is_stale(k)]:
+                per_session.pop(k).release()
+            if key not in per_session:
+                return build(df)  # its file changed after it was loaded
+            stamped = build(df).withColumn(_STAMP, F.lit(uuid.uuid4().hex))
+            stamped.persist()
+            stamped.count()
+            entry.derived[tag] = (stamped._jdf, stamped.drop(_STAMP)._jdf)
+    return DataFrame(entry.derived[tag][1], spark)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -158,15 +248,15 @@ def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     corpus, a pruned landing zone, a dims-only catalog) is a normal
     state, and a pure-SQL query fails with a clear unresolved-relation
     message only if it actually references an absent table."""
-    import os
-
     dfs: dict[str, DataFrame] = {}
     state = []
     for name in TABLE_NAMES:
-        if os.path.exists(table_path(sf_dir, name)):
-            dfs[name] = load_table(spark, sf_dir, name)
+        try:
             st = os.stat(table_path(sf_dir, name))
-            state.append((name, st.st_mtime_ns, st.st_size))
+        except OSError:
+            continue  # absent, or removed since the listing: skip it
+        dfs[name] = load_table(spark, sf_dir, name)
+        state.append((name, st.st_mtime_ns, st.st_size))
     # re-registering the identical view set is ~10 py4j round trips
     # (~250 ms) per call; skip when THIS function's last registration on
     # this session covered the same (sf_dir, corpus-state). Any change —
@@ -174,9 +264,8 @@ def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     # in the key and re-registers. Nothing else in this package creates
     # temp views under these names.
     key = (os.path.realpath(sf_dir), tuple(state))
-    per_session = _PLAN_CACHE.setdefault(spark, {})
-    if per_session.get("__views__") != key:
+    if _VIEWS.get(spark) != key:
         for name, df in dfs.items():
             df.createOrReplaceTempView(name)
-        per_session["__views__"] = key
+        _VIEWS[spark] = key
     return dfs

@@ -197,3 +197,23 @@ def test_ts_us_ntz_inference_pinned_and_unknown_type_named(spark, tmp_path):
     df = spark.createDataFrame([("x",)], "ts string")
     with _pytest.raises(TypeError, match="unsupported events.ts type"):
         ts_us_expr(df)
+
+
+def test_register_views_skips_a_table_gone_before_its_stat(spark, monkeypatch):
+    """A table listed as present but removed before its stat is skipped
+    like a missing table, not raised out of register_views."""
+    from pulsar_project_spark.sources import tables
+    from tests.conftest import SF_SMOKE
+
+    gone = tables.table_path(SF_SMOKE, "orders")
+    real_stat = os.stat
+
+    def stat(path, *args, **kwargs):
+        if os.fspath(path) == gone:
+            raise FileNotFoundError(path)
+        return real_stat(path, *args, **kwargs)
+
+    monkeypatch.setattr(os.path, "exists", lambda path: True)  # listed
+    monkeypatch.setattr(os, "stat", stat)
+    dfs = tables.register_views(spark.newSession(), SF_SMOKE)
+    assert set(dfs) == set(tables.TABLE_NAMES) - {"orders"}
