@@ -1353,8 +1353,8 @@ def q_tx_schema_evolution_census(spark: SparkSession,
     """SCHEMA EVOLUTION (ADD COLUMN) on the transactional log — the
     lakehouse property that widening a table costs ZERO rewrites:
     generation 1 lands WITHOUT the ``day`` column, generation 2 lands
-    with it, and ``tx_read(merge_schema=True)`` unions the generations
-    by name — old rows scan with NULL for the new column, exactly
+    with it, and ``tx_read`` reads under the snapshot's recorded schema
+    union — old rows scan with NULL for the new column, exactly
     Delta/Iceberg ADD COLUMN semantics. The census counts per type how
     many rows CARRY the new column (non-NULL day — only generation-2
     rows with a timestamp can), alongside the full-row count and exact
@@ -1367,8 +1367,8 @@ def q_tx_schema_evolution_census(spark: SparkSession,
     systems' rule too).
 
     Scale shape: widening a 100 TB table is one metadata decision; the
-    merged read costs the same scan it always did (parquet mergeSchema
-    resolves footers, not data)."""
+    read costs the same scan it always did (the manifest records the
+    schema union, so planning opens no footer)."""
     import shutil
 
     from pulsar_project_spark.sources.txlog import (
@@ -1400,11 +1400,7 @@ def q_tx_schema_evolution_census(spark: SparkSession,
     tx_append(gen2, path, n_files=2)
     if not tx_snapshot(path)["files"]:
         return spark.createDataFrame([], empty_schema)
-    back = tx_read(spark, path, merge_schema=True)
-    if "day" not in back.columns:
-        # a degenerate corpus may write only generation-1 files
-        back = back.withColumn("day", F.lit(None).cast("long"))
-    return back.groupBy("event_type").agg(
+    return tx_read(spark, path).groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.sum("value_cents").alias("total_cents"),
         F.count("day").alias("n_with_day"),

@@ -24,7 +24,6 @@ from __future__ import annotations
 
 import os
 import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -56,13 +55,8 @@ class DirectoryQueue:
         """Append a batch of messages (MESSAGE_SCHEMA columns) to the
         topic log. Append-mode parquet — each produce is one or more
         new immutable files, i.e. one broker ledger entry."""
-        df.select(
-            F.col("key").cast("binary"),
-            F.col("value").cast("binary"),
-            F.lit(topic).alias("topic"),
-            F.col("publish_ts_us").cast("long"),
-            F.col("seq").cast("long"),
-        ).write.mode("append").parquet(self.topic_path(topic))
+        _as_messages(df, topic).write.mode("append").parquet(
+            self.topic_path(topic))
 
     def read_stream(self, spark: SparkSession, topic: str,
                     max_files_per_trigger: int | None = None) -> DataFrame:
@@ -75,23 +69,26 @@ class DirectoryQueue:
         return spark.read.schema(MESSAGE_SCHEMA).parquet(self.topic_path(topic))
 
     def write_stream(self, sdf: DataFrame, topic: str,
-                     checkpoint: str | None = None):
-        """Streaming sink into a topic: append-mode parquet with a
-        checkpoint — exactly-once file-level delivery."""
-        ckpt = checkpoint or tempfile.mkdtemp(prefix="mq_ckpt_")
-        return (
-            sdf.select(
-                F.col("key").cast("binary"),
-                F.col("value").cast("binary"),
-                F.lit(topic).alias("topic"),
-                F.col("publish_ts_us").cast("long"),
-                F.col("seq").cast("long"),
-            )
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", self.topic_path(topic))
-            .option("checkpointLocation", ckpt)
-        )
+                     checkpoint: str | None = None) -> None:
+        """Streaming sink into a topic: drain ``sdf`` (``availableNow``)
+        as append-mode parquet with a checkpoint — exactly-once
+        file-level delivery; pass ``checkpoint`` to resume across
+        calls."""
+        from pulsar_project_spark.streaming.pipeline import _drain
+
+        _drain(_as_messages(sdf, topic), mode="append",
+               checkpoint=checkpoint, sink=self.topic_path(topic))
+
+
+def _as_messages(df: DataFrame, topic: str) -> DataFrame:
+    """``df``'s MESSAGE_SCHEMA columns, cast, stamped with ``topic``."""
+    return df.select(
+        F.col("key").cast("binary"),
+        F.col("value").cast("binary"),
+        F.lit(topic).alias("topic"),
+        F.col("publish_ts_us").cast("long"),
+        F.col("seq").cast("long"),
+    )
 
 
 def compact_topic(spark: SparkSession, queue: DirectoryQueue, topic: str,
@@ -183,17 +180,13 @@ def roundtrip_pipeline(spark: SparkSession, sf_dir: str,
             F.monotonically_increasing_id().alias("seq"),
         ).write.mode("overwrite").parquet(out_path)
 
-    from pulsar_project_spark.streaming.pipeline import _state_partitions
+    from pulsar_project_spark.streaming.pipeline import (
+        _drain,
+        _state_partitions,
+    )
 
     with _state_partitions(spark):
-        query = (
-            agg.writeStream.outputMode("complete")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="mq_ckpt_"))
-            .foreachBatch(sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
+        _drain(agg, mode="complete", sink=sink)
 
     out_schema = StructType([
         StructField("event_type", StringType()),

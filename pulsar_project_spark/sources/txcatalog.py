@@ -42,11 +42,20 @@ import json
 import os
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from pulsar_project_spark.sources.txlog import (
+    _RID,
     TxConflict,
+    _commit,
+    _df_schema_map,
+    _fresh_ids,
+    _parquet_num_rows,
+    _read_rewrite_source,
+    _rewrite_ids,
+    _scan,
     _stage_dataframe,
+    _tracked,
     tx_init,
     tx_latest_version,
     tx_snapshot,
@@ -135,26 +144,30 @@ def catalog_init(catalog: str, tables: dict[str, str]) -> None:
 
 
 def _commit_branch(table: str, parent: int, files: list[str],
-                   op: str, max_retries: int = 16) -> int:
-    """Commit ``files`` as a new version whose recorded LINEAGE is
-    ``parent`` but whose version NUMBER is the next free one — the
-    allocator a catalog-managed table needs: a concurrent writer that
-    takes latest+1 first must not force us to re-derive content (our
-    content depends only on the catalog-pinned ``parent``; the catalog
-    CAS, not the table version number, decides who wins)."""
-    from pulsar_project_spark.sources.txlog import _commit
-
+                   op: str, max_retries: int = 16, **changes) -> int:
+    """Commit ``files`` as a new version whose recorded LINEAGE is the
+    catalog-pinned version ``parent`` but whose version NUMBER is the
+    next free one — the allocator a catalog-managed table needs: a
+    concurrent writer that takes latest+1 first must not force us to
+    re-derive content (our content depends only on ``parent``; the
+    catalog CAS, not the table version number, decides who wins). The
+    new version inherits ``parent``'s metadata (``_commit``'s rule),
+    not the allocation slot's, which may be an abandoned branch;
+    ``changes`` are this commit's own manifest changes."""
     base = tx_latest_version(table)
     if base is None:
         raise ValueError(f"not a tx table: {table}")
+    pinned = tx_snapshot(table, parent)
     for attempt in range(max_retries):
+        slot = tx_snapshot(table, base + attempt)
         try:
             # the manifest's recorded parent is the ALLOCATION slot;
             # the true lineage rides in the txn field for audit —
             # lineage consumers read the catalog, and the manifest's
             # file list is complete in itself
-            v = _commit(table, tx_snapshot(table, base + attempt), files,
-                        op=op, txn={"lineage": parent})
+            v = _commit(table, {**pinned, "version": slot["version"],
+                                "ts_us": slot["ts_us"]}, files,
+                        op=op, txn={"lineage": parent}, **changes)
         except TxConflict:
             continue
         return v
@@ -170,31 +183,43 @@ def catalog_move(spark: SparkSession, catalog: str, src: str, dst: str,
 
     Scale shape: the data plane is one read of src + two writes (the
     survivors, the movers); the atomicity costs only metadata — two
-    staged table manifests and one catalog CAS."""
+    staged table manifests and one catalog CAS.
+
+    Row tracking: the source is read through the rewrite path, so on a
+    tracked source the survivors keep their ids (materialized ``_rid``)
+    and the movers shed theirs; moved rows are INSERTS in a tracked
+    destination and get fresh ids from its ``row_hwm``."""
     for _ in range(max_retries):
         csnap = catalog_snapshot(catalog)
         (src_dir, src_v) = csnap["tables"][src]
         (dst_dir, dst_v) = csnap["tables"][dst]
         ssnap = tx_snapshot(src_dir, src_v)
         dsnap = tx_snapshot(dst_dir, dst_v)
+        new_src, moved, src_schema, dst_schema = [], [], {}, {}
         if ssnap["files"]:
             # masked read: deletion vectors on the pinned src snapshot
             # must hold through the move — a plain scan would resurrect
             # masked rows into one of the two output tables
-            from pulsar_project_spark.sources.txlog import (
-                _read_files_masked,
-            )
-
-            df = _read_files_masked(spark, src_dir, ssnap, ssnap["files"])
+            df = _read_rewrite_source(spark, src_dir, ssnap, ssnap["files"])
             movers = df.filter(predicate)
             survivors = df.filter(~predicate | predicate.isNull())
+            if _RID in movers.columns:
+                movers = movers.drop(_RID)
             new_src = _stage_dataframe(survivors, src_dir, n_files=2)
             moved = _stage_dataframe(movers, dst_dir, n_files=2)
-        else:
-            new_src, moved = [], []
-        src_v2 = _commit_branch(src_dir, src_v, new_src, op="move-out")
-        dst_v2 = _commit_branch(dst_dir, dst_v,
-                                dsnap["files"] + moved, op="move-in")
+            src_schema = _df_schema_map(survivors)
+            dst_schema = _df_schema_map(movers)
+        rids, hwm = {}, None
+        if _tracked(dsnap):
+            rids, hwm = _fresh_ids(dsnap, moved, {
+                n: _parquet_num_rows(os.path.join(dst_dir, n))
+                for n in moved})
+        src_v2 = _commit_branch(src_dir, src_v, new_src, op="move-out",
+                                schema=src_schema,
+                                rids=_rewrite_ids(ssnap, new_src))
+        dst_v2 = _commit_branch(dst_dir, dst_v, dsnap["files"] + moved,
+                                op="move-in", schema=dst_schema,
+                                rids=rids, row_hwm=hwm)
         tables = dict(csnap["tables"])
         tables[src] = [src_dir, src_v2]
         tables[dst] = [dst_dir, dst_v2]
@@ -215,15 +240,13 @@ def catalog_read(spark: SparkSession, catalog: str, name: str,
     ignored deletion vectors and column mapping, so a catalog-managed
     table with a DV delete resurrected masked rows and a renamed one
     leaked physical column names)."""
-    from pulsar_project_spark.sources.txlog import _read_files_masked
-
     csnap = catalog_snapshot(catalog, version)
     tdir, tv = csnap["tables"][name]
     snap = tx_snapshot(tdir, tv)
     files = snap["files"]
     if not files:
         return None, 0
-    return _read_files_masked(spark, tdir, snap, files), len(files)
+    return _scan(spark, tdir, snap, files, row_ids=False), len(files)
 
 
 def catalog_vacuum(catalog: str, retention_seconds: float = 86400.0) -> int:

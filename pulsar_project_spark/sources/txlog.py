@@ -78,12 +78,14 @@ save/load surface.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 _MANIFEST_DIR = "_manifests"
 _STAGING_DIR = "_staging"
@@ -376,106 +378,102 @@ def _append_commit(table: str, new_files: list[str], op: str, *,
     raise TxConflict(f"append lost {max_retries} CAS races in {table}")
 
 
-def _read_files_masked(spark: SparkSession, table: str, snap: dict,
-                       names: list[str],
-                       merge_schema: bool = False) -> DataFrame:
-    """Read ``names`` from ``snap``, applying the snapshot's deletion
-    vectors (merge-on-read DELETE): files with a DV entry are scanned
-    with the parquet ``_metadata`` columns and anti-joined on
-    (file_name, row_index) against the DV relation; files without one
-    scan plain. The DV side is commit-bounded metadata (one row per
-    deleted row position) and broadcasts; the data side never
-    rewrites — exactly the read-time half of Delta deletion vectors.
-    ``merge_schema`` unions the file generations' schemas (SCHEMA
-    EVOLUTION — see ``tx_read``)."""
-    from pyspark.sql import functions as F
+# a deletion-vector sidecar read through ``_scan`` as a one-generation
+# table: (data file name, row position) per masked row
+_DV_SNAP = {"schema": {"file": "string", "pos": "bigint"}}
 
-    chain = snap.get("renames", [])
-    drops = snap.get("drops", [])
-    if chain or drops:
-        merge_schema = True  # generations differ by column NAME/presence
-    if snap.get("rids"):
-        # row-tracked tables mix positional files with materialized
-        # ones (physical _rid column) — union the generations' schemas;
-        # the internal id column is dropped below (this is the VALUES
-        # view; tx_read_tracked is the identity view)
-        merge_schema = True
-    # ALTER COLUMN TYPE (widening): generations written before the
-    # widen carry the narrow physical type, which parquet mergeSchema
-    # refuses to reconcile — so a widened table reads under an EXPLICIT
-    # schema (footer union, widened columns promoted) and Spark's
-    # scan-level type promotion reads int32 pages as bigint etc.
-    # Missing columns still read as NULL (ADD COLUMN semantics).
-    explicit = (_widened_read_schema(table, snap, names)
-                if snap.get("types") else None)
 
-    def _reader():
-        r = spark.read
-        if explicit is not None:
-            return r.schema(explicit)
-        return r.option("mergeSchema", "true") if merge_schema else r
+def _dv_mask(spark: SparkSession, table: str, snap: dict,
+             names: list[str]) -> DataFrame | None:
+    """The (file, pos) rows the snapshot's deletion vectors mask in
+    ``names``; None when none of them carries a DV."""
     dvs = snap.get("dvs", {})
-    plain = [n for n in names if n not in dvs]
-    masked = [n for n in names if n in dvs]
-    parts = []
-    if plain:
-        parts.append(_reader().parquet(
-            *(os.path.join(table, n) for n in plain)))
-    if masked:
-        dv_files = sorted({dvs[n] for n in masked})
-        mask = spark.read.parquet(
-            *(os.path.join(table, d) for d in dv_files)).select(
-            "file", "pos").distinct()
-        df = _reader().parquet(*(os.path.join(table, n) for n in masked))
-        data_cols = df.columns
-        keyed = df.select(
-            "*",
-            F.col("_metadata.file_name").alias("__file"),
-            F.col("_metadata.row_index").alias("__pos"),
-        )
-        # no broadcast hint: masks are usually tiny (AQE broadcasts them
-        # at runtime) but are bounded only by the number of deleted
-        # rows — a forced broadcast would be the wrong plan for a table
-        # carrying massive DV debt (where compaction is overdue anyway)
-        survivors = keyed.join(
-            mask,
-            (keyed["__file"] == mask["file"]) & (keyed["__pos"] == mask["pos"]),
-            "left_anti",
-        ).select(*data_cols)
-        parts.append(survivors)
-    out = parts[0]
-    for p in parts[1:]:
-        # generations may carry different schemas under merge_schema;
-        # missing columns read as NULL (ADD COLUMN semantics)
-        out = out.unionByName(p, allowMissingColumns=merge_schema)
-    out = _apply_renames(out, chain)
-    present = [c for c in drops if c in out.columns]
-    if snap.get("rids") and _RID in out.columns:
-        present = present + [_RID]
-    return out.drop(*present) if present else out
+    dv_files = sorted({dvs[n] for n in names if n in dvs})
+    if not dv_files:
+        return None
+    return _scan(spark, table, _DV_SNAP, dv_files, row_ids=False)
+
+
+def _scan(spark: SparkSession, table: str, snap: dict, names: list[str],
+          *, row_ids: bool, positions: bool = False) -> DataFrame:
+    """THE scan over table files — every read of live rows ends here.
+
+    ``names`` (files of ``snap``) are read under the schema the snapshot
+    records (``_widened_read_schema``: the manifest's schema union with
+    widened types promoted, footer union for pre-upgrade tables), so
+    every generation reads with every column the table ever had — a
+    generation written before ADD COLUMN reads NULL for it — and
+    narrow pages promote in the scan. Deletion vectors (merge-on-read
+    DELETE) apply as an anti-join on (``_metadata.file_name``,
+    ``_metadata.row_index``) against the DV relation; the mask is not
+    broadcast-hinted: usually tiny (AQE broadcasts it at runtime) but
+    bounded only by the number of deleted rows. Then renames resolve
+    (``_apply_renames``) and dropped columns are projected out.
+
+    ``row_ids=True`` is the identity view of a row-tracked table: the
+    ``_rid`` column is resolved from the same (file, row_index) keys the
+    mask addresses — ``base + row_index`` for positional files via a
+    broadcast join against the manifest's (file → base) map, the
+    physical ``_rid`` for materialized ones — and a file without
+    tracking metadata raises (the loud error beats a silent NULL id).
+    Otherwise a tracked table's physical ``_rid`` is dropped (the values
+    view). ``positions=True`` keeps the ``__file``/``__pos`` keys."""
+    rids = snap.get("rids", {})
+    if row_ids:
+        untracked = [n for n in names if n not in rids]
+        if untracked:
+            raise ValueError(
+                f"{table}: files without row-tracking metadata (a table is "
+                f"tracked only if created with tx_init(table, "
+                f"row_tracking=True)): {sorted(untracked)[:3]}")
+    df = spark.read.schema(_widened_read_schema(table, snap, names)).parquet(
+        *(os.path.join(table, n) for n in names))
+    data_cols = [c for c in df.columns if c != _RID or not _tracked(snap)]
+    positional = ({n: rids[n] for n in names if rids[n] is not None}
+                  if row_ids else {})
+    mask = _dv_mask(spark, table, snap, names)
+    if positional or mask is not None or positions:
+        df = df.select("*", F.col("_metadata.file_name").alias("__file"),
+                       F.col("_metadata.row_index").alias("__pos"))
+    extra = ["__file", "__pos"] if positions else []
+    if row_ids:
+        rid = None
+        if positional:
+            bases = spark.createDataFrame(
+                sorted(positional.items()),
+                schema="__file string, __base bigint")
+            df = df.join(F.broadcast(bases), "__file", "left")
+            rid = F.col("__base") + F.col("__pos")
+        if len(positional) < len(names):  # materialized files present
+            phys = F.col(_RID).cast("bigint")
+            rid = phys if rid is None else F.coalesce(rid, phys)
+        extra.insert(0, rid.alias(_RID))
+    if mask is not None:
+        df = df.join(mask.toDF("__file", "__pos"), ["__file", "__pos"],
+                     "left_anti")
+    if extra or len(data_cols) < len(df.columns):
+        df = df.select(*data_cols, *extra)
+    df = _apply_renames(df, snap.get("renames", []))
+    gone = [c for c in snap.get("drops", []) if c in df.columns and c != _RID]
+    return df.drop(*gone) if gone else df
 
 
 def tx_read(spark: SparkSession, table: str,
-            version: int | None = None,
-            merge_schema: bool = False) -> DataFrame:
+            version: int | None = None) -> DataFrame:
     """Read one immutable snapshot (default: latest), deletion vectors
     applied. The file list is pinned at plan time, so concurrent
     commits/compactions/vacuums of NEWER versions cannot change or
     tear this scan — snapshot isolation by construction.
 
-    ``merge_schema=True`` is SCHEMA EVOLUTION on read (the Delta/
-    Iceberg ADD COLUMN property): file generations written before a
-    column existed scan with NULLs for it, generations written after
-    carry it — no rewrite of old data, ever. The union is by NAME
-    (parquet mergeSchema), so the widened schema is the union of all
-    generations' columns; widening is append-shaped (new columns), not
-    renames — a rename is a new column plus a backfill, exactly as the
-    real systems treat it."""
+    SCHEMA EVOLUTION on read (the Delta/Iceberg ADD COLUMN property) is
+    unconditional: the snapshot's recorded schema is the union of every
+    generation's columns, so file generations written before a column
+    existed scan with NULLs for it, generations written after carry it
+    — no rewrite of old data, ever."""
     snap = tx_snapshot(table, version)
     if not snap["files"]:
         raise ValueError(f"version {snap['version']} of {table} is empty")
-    return _read_files_masked(spark, table, snap, snap["files"],
-                              merge_schema=merge_schema)
+    return _scan(spark, table, snap, snap["files"], row_ids=False)
 
 
 def plan_compaction(table: str, target_bytes: int) -> list[list[str]]:
@@ -647,8 +645,6 @@ def tx_optimize_zorder(spark: SparkSession, table: str, col_a: str,
     min/max footer stats now bound BOTH dims, which is what lets a
     100 TB reader skip files on either predicate (tests/test_txlog.py
     asserts the written footer spans)."""
-    from pyspark.sql import functions as F
-
     from pulsar_project_spark.operators.layout import norm16_sql, zvalue
 
     for _ in range(max_retries):
@@ -850,9 +846,7 @@ def _read_rewrite_source(spark: SparkSession, table: str, snap: dict,
     physical column — after the commit the ids are data, immune to the
     positional shifts applied deletion vectors cause (Delta row
     tracking's rule)."""
-    if _tracked(snap):
-        return _read_tracked_files(spark, table, snap, names)
-    return _read_files_masked(spark, table, snap, names)
+    return _scan(spark, table, snap, names, row_ids=_tracked(snap))
 
 
 def _split_by_bounds(snap: dict, col: str, lo, hi) -> tuple[list, list]:
@@ -1004,16 +998,22 @@ def tx_read_pruned(spark: SparkSession, table: str, col: str,
                 break
         if not skip:
             chosen.append(name)
+    return _read_chosen(spark, table, snap, chosen, f"{col} in [{lo}, {hi}]",
+                        F.col(col).between(lo, hi))
+
+
+def _read_chosen(spark: SparkSession, table: str, snap: dict,
+                 chosen: list[str], wanted: str, residual):
+    """The shared tail of the skipping reads (``tx_read_pruned``,
+    ``tx_read_bloom_point``): raise when no file can hold ``wanted``,
+    else scan the chosen files and re-apply the exact predicate
+    ``residual`` — correctness never depends on the skipping metadata.
+    Returns (DataFrame, n_files_read, n_files_total)."""
     if not chosen:
         raise ValueError(
-            f"no file of {table} v{snap['version']} can contain "
-            f"{col} in [{lo}, {hi}]"
-        )
-    from pyspark.sql import functions as F
-
-    df = _read_files_masked(spark, table, snap, chosen)
-    return (df.filter(F.col(col).between(lo, hi)),
-            len(chosen), len(snap["files"]))
+            f"no file of {table} v{snap['version']} can contain {wanted}")
+    df = _scan(spark, table, snap, chosen, row_ids=False)
+    return df.filter(residual), len(chosen), len(snap["files"])
 
 
 def tx_delete_range(spark: SparkSession, table: str, col: str, lo, hi,
@@ -1028,8 +1028,6 @@ def tx_delete_range(spark: SparkSession, table: str, col: str, lo, hi,
     Delta/Iceberg copy-on-write DELETE reduced to its correctness
     core; at 100 TB the bounds test is what keeps a targeted delete
     from rewriting the whole table."""
-    from pyspark.sql import functions as F
-
     for _ in range(max_retries):
         snap = tx_snapshot(table)
         affected, kept = _split_by_bounds(snap, col, lo, hi)
@@ -1065,8 +1063,6 @@ def _regenerate_updated(df: DataFrame, table: str, gens: dict,
     ``tx_read_pruned`` silently drop rows whose base matches). Rows
     the DML does not touch keep their values: every write path
     enforces the generator, so they conformed when written."""
-    from pyspark.sql import functions as F
-
     for g, spec in sorted(gens.items()):
         base, k = spec["base"], int(spec["div"])
         if g in set_exprs and g in df.columns:
@@ -1139,8 +1135,6 @@ def tx_update(spark: SparkSession, table: str, col: str, lo, hi,
     overlap, not the table. Reference anchor: the reference mutates
     task/memory fields in place (task.py:406-470) with no concurrent-
     writer story; this is that surface on the transactional log."""
-    from pyspark.sql import functions as F
-
     for _ in range(max_retries):
         snap = tx_snapshot(table)
         affected, kept = _split_by_bounds(snap, col, lo, hi)
@@ -1297,13 +1291,6 @@ def tx_version_as_of_timestamp(table: str, ts_us: int) -> int:
     return best
 
 
-def tx_read_as_of_timestamp(spark: SparkSession, table: str,
-                            ts_us: int) -> DataFrame:
-    """``tx_read`` at the snapshot ``tx_version_as_of_timestamp``
-    resolves — SELECT ... TIMESTAMP AS OF."""
-    return tx_read(spark, table, tx_version_as_of_timestamp(table, ts_us))
-
-
 def tx_delete_range_dv(spark: SparkSession, table: str, col: str, lo, hi,
                        max_retries: int = 3) -> int:
     """MERGE-ON-READ DELETE (deletion vectors): instead of rewriting
@@ -1311,8 +1298,8 @@ def tx_delete_range_dv(spark: SparkSession, table: str, col: str, lo, hi,
     copy-on-write), record the matching rows' (file, row-position)
     pairs in a DV sidecar parquet and map the affected files to it in
     the manifest — zero data bytes rewritten, deletes cost
-    O(deleted rows) metadata. Readers (``tx_read`` and every path
-    through ``_read_files_masked``) anti-join the mask at scan time;
+    O(deleted rows) metadata. Readers (every read goes through
+    ``_scan``) anti-join the mask at scan time;
     ``tx_compact`` later applies and drops the masks (DV compaction),
     and vacuum then reclaims the orphaned DV files. At 100 TB with
     frequent row-level corrections this is the difference between a
@@ -1324,50 +1311,19 @@ def tx_delete_range_dv(spark: SparkSession, table: str, col: str, lo, hi,
     (a mask only removes rows — min/max remain conservative), so
     pruning keeps working and the bounds pick which files even need
     scanning for matches, exactly as in the COW path."""
-    from pyspark.sql import functions as F
-
     for _ in range(max_retries):
         snap = tx_snapshot(table)
-        chain = snap.get("renames", [])
-        dvs = snap.get("dvs", {})
         affected, _ = _split_by_bounds(snap, col, lo, hi)
         if not affected:
             return snap["version"]
-        # raw physical read (positions must be per-FILE, pre-rename):
-        # the logical column may live under ancestor physical names in
-        # pre-rename generations, so coalesce every ancestor present.
-        # Renamed OR widened tables read under the explicit physical-
-        # union schema (mergeSchema refuses int/bigint generations)
-        if chain or snap.get("types"):
-            rdr = spark.read.schema(
-                _widened_read_schema(table, snap, affected))
-        else:
-            rdr = spark.read
-        src = rdr.parquet(*(os.path.join(table, n) for n in affected))
-        anc = [c for c in _physical_ancestors(col, chain)
-               if c in src.columns]
-        val = (F.coalesce(*(F.col(c) for c in anc)) if len(anc) > 1
-               else F.col(anc[0]) if anc else F.col(col))
-        keyed = src.select(
-            F.col("_metadata.file_name").alias("file"),
-            F.col("_metadata.row_index").alias("pos"),
-            val.alias("__v"),
-        )
-        old_dv_files = sorted({dvs[n] for n in affected if n in dvs})
-        if old_dv_files:
-            old_mask = spark.read.parquet(
-                *(os.path.join(table, d) for d in old_dv_files)).select(
-                "file", "pos")
-            # only rows not already masked can be newly deleted (AQE
-            # broadcasts the usually-tiny mask at runtime; see
-            # _read_files_masked for why no forced hint)
-            live = keyed.join(old_mask.distinct(),
-                              ["file", "pos"], "left_anti")
-        else:
-            old_mask = None
-            live = keyed
-        matched = live.filter(F.col("__v").between(lo, hi)).select(
-            "file", "pos")
+        # the live rows of the affected files (only rows not already
+        # masked can be newly deleted) with their per-FILE physical
+        # positions, the logical column resolved through renames
+        live = _scan(spark, table, snap, affected, row_ids=False,
+                     positions=True)
+        matched = live.filter(F.col(col).between(lo, hi)).select(
+            F.col("__file").alias("file"), F.col("__pos").alias("pos"))
+        old_mask = _dv_mask(spark, table, snap, affected)
         if matched.isEmpty():
             return snap["version"]
         merged = (matched if old_mask is None
@@ -1413,8 +1369,6 @@ def tx_table_changes(spark: SparkSession, table: str,
     Composes with ``retractable_agg_view_census``'s fold to maintain
     any linear aggregate view incrementally off storage, and with the
     ``TxChangeFeedDataSource`` streaming source that tails the chain."""
-    from pyspark.sql import functions as F
-
     if v_to is None:
         v_to = tx_latest_version(table)
         if v_to is None:
@@ -1462,29 +1416,22 @@ def tx_table_changes(spark: SparkSession, table: str,
     final_chain = final_snap.get("renames", [])
     final_drops = final_snap.get("drops", [])
     for snap, names, w, v in sides:
-        # tracked tables mix positional files (no physical _rid) with
-        # materialized ones inside a single side — union their schemas
-        part = _apply_renames(
-            _read_files_masked(spark, table, snap, names,
-                               merge_schema=bool(snap.get("rids"))),
-            final_chain)
+        # the VALUE feed is identity-agnostic by design
+        # (tx_changes_by_rid is the identity feed): a tracked table's
+        # materialized _rid is dropped by the values scan, so a
+        # materialization boundary never looks like a data change
+        part = _apply_renames(_scan(spark, table, snap, names,
+                                    row_ids=False), final_chain)
         gone = [c for c in final_drops if c in part.columns]
         if gone:
             part = part.drop(*gone)
-        # row-tracked tables: files written by a rewrite carry the
-        # materialized _rid as a PHYSICAL column, files written by
-        # appends don't — the VALUE feed is identity-agnostic by
-        # design (tx_changes_by_rid is the identity feed), so drop it
-        # rather than let mixed generations break the union or make
-        # every materialization boundary look like a data change
-        if _RID in part.columns:
-            part = part.drop(_RID)
         parts.append(
             part.withColumn("_commit_version", F.lit(v).cast("int"))
             .withColumn("_w", F.lit(w).cast("long")))
     un = parts[0]
     for p in parts[1:]:
-        un = un.unionByName(p)
+        # a side read before an ADD COLUMN lacks it: NULL-filled
+        un = un.unionByName(p, allowMissingColumns=True)
     data_cols = [c for c in un.columns if c not in ("_commit_version", "_w")]
     return (
         un.groupBy("_commit_version", *data_cols)
@@ -1520,7 +1467,6 @@ def tx_typed_changes(spark: SparkSession, table: str, key_col: str,
     snapshot (the ``tx_merge_upsert`` precondition); under duplicate
     keys the label degrades to 'both sides present → update' without
     pairing individual rows, which is the honest relational answer."""
-    from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
     feed = tx_table_changes(spark, table, v_from, v_to)
@@ -1688,8 +1634,6 @@ def tx_read_bloom_point(spark: SparkSession, table: str, col: str,
     (the ``tx_read_pruned`` convention). Planning cost is pure driver
     arithmetic on manifest metadata — zero storage I/O for skipped
     files, which at 100 TB is the entire point of a needle query."""
-    from pyspark.sql import functions as F
-
     vs = list(values) if isinstance(values, (list, tuple, set)) else [values]
     for v in vs:
         # the documented int/string restriction, ENFORCED: a probe whose
@@ -1726,13 +1670,8 @@ def tx_read_bloom_point(spark: SparkSession, table: str, col: str,
                 break
         if maybe:
             chosen.append(name)
-    if not chosen:
-        raise ValueError(
-            f"no file of {table} v{snap['version']} can contain "
-            f"{col} in {vs}")
-    df = _read_files_masked(spark, table, snap, chosen)
-    return (df.filter(F.col(col).isin(vs)),
-            len(chosen), len(snap["files"]))
+    return _read_chosen(spark, table, snap, chosen, f"{col} in {vs}",
+                        F.col(col).isin(vs))
 
 
 # ---------------------------------------------------------------------------
@@ -1758,8 +1697,6 @@ def _enforce_constraints(df: DataFrame, table: str,
     rule, and Delta's). One job evaluates all predicates at once
     (conjunction pushed into a single filter+limit), so enforcement
     costs one pass over the WRITE — never over the table."""
-    from pyspark.sql import functions as F
-
     cs = tx_constraints(table) if constraints is None else constraints
     if not cs:
         return
@@ -1790,7 +1727,7 @@ def tx_set_constraint(spark: SparkSession, table: str, name: str,
         cs[name] = predicate
         if snap["files"]:
             _enforce_constraints(
-                _read_files_masked(spark, table, snap, snap["files"]),
+                _scan(spark, table, snap, snap["files"], row_ids=False),
                 table, {name: predicate})
         try:
             return _commit(table, snap, list(snap["files"]),
@@ -1900,8 +1837,6 @@ def _apply_renames(df: DataFrame, chain: list) -> DataFrame:
     win where present — they are never NULL for rows they physically
     hold) and drops the physical column; a frame carrying only the old
     name renames it. Pure projection — zero data movement."""
-    from pyspark.sql import functions as F
-
     for old, new in chain:
         cols = df.columns
         if old in cols and new in cols:
@@ -2067,16 +2002,17 @@ def _sql_type(name: str):
 
 
 def _widened_read_schema(table: str, snap: dict, names: list[str]):
-    """The EXPLICIT read schema for a widened table: the physical
+    """The EXPLICIT read schema of every scan (``_scan``): the physical
     schema union — manifest-recorded, so planning does ZERO per-file
     I/O; footer fallback for pre-upgrade tables — with every physical
     column whose LOGICAL name appears in the manifest type map promoted
     to the widened type. Spark's parquet scan then promotes narrow
     pages in place: no mergeSchema (which refuses int/bigint unions),
-    no per-generation read plans. Stale physical names in the union
-    (generations a subset read skips) surface as nulls and are
-    coalesced/projected away by the rename/drop resolution — the table
-    schema stays stable no matter which files a pruned read touches."""
+    no per-generation read plans. Columns a file lacks (generations
+    written before ADD COLUMN, stale physical names a subset read
+    skips) surface as nulls and are coalesced/projected away by the
+    rename/drop resolution — the table schema stays stable no matter
+    which files a pruned read touches."""
     from pyspark.sql.types import StructField, StructType
 
     types = snap.get("types", {})
@@ -2089,9 +2025,11 @@ def _widened_read_schema(table: str, snap: dict, names: list[str]):
     return StructType(out)
 
 
+@functools.lru_cache(maxsize=None)
 def _sql_type_any(name: str):
     """SQL type string → Spark DataType: the widening vocabulary fast
-    path, then the general DDL parser (arrays, strings, timestamps)."""
+    path, then the general DDL parser (arrays, strings, timestamps; one
+    JVM round trip per distinct type string, hence the cache)."""
     try:
         return _sql_type(name)
     except KeyError:
@@ -2202,8 +2140,6 @@ def tx_merge(spark: SparkSession, table: str, source: DataFrame,
     updated and carried rows keep their ``_rid`` (materialized through
     the rewrite) and genuine inserts land in their own files with fresh
     ids."""
-    from pyspark.sql import functions as F
-
     replace_row = when_matched_set == "*"
     if delete_matched and when_matched_set:
         raise ValueError(
@@ -2391,9 +2327,18 @@ def tx_reorg_purge(spark: SparkSession, table: str,
                 src, table, n_files=max(1, len(lagging) // 2))
             schema = _df_schema_map(src)
         # stats + blooms rebuilt under LOGICAL names for the outputs; a
-        # physically clean table only clears the mapping metadata
+        # physically clean table only clears the mapping metadata. The
+        # schema union restarts from the LOGICAL schema: with the chain
+        # and drop list cleared, a retired physical name left in it
+        # would read back as a NULL column
+        logical = {}
+        for n, t in _physical_schema_map(table, snap).items():
+            lc = _resolve_to_logical(n, chain)
+            if lc not in drops:
+                logical[lc] = types.get(lc, t)
         try:
-            return _commit(table, snap, clean + produced, op="reorg-purge",
+            return _commit(table, {**snap, "schema": logical},
+                           clean + produced, op="reorg-purge",
                            schema=schema,
                            stats=_rebuilt_stats(table, snap, produced),
                            rids=_rewrite_ids(snap, produced),
@@ -2417,73 +2362,6 @@ def _parquet_num_rows(path: str) -> int:
     return papq.read_metadata(path).num_rows
 
 
-def _read_tracked_files(spark: SparkSession, table: str, snap: dict,
-                        names: list[str]) -> DataFrame:
-    """Read ``names`` with the ``_rid`` row-id column resolved and the
-    snapshot's deletion vectors applied. One scan: positional files get
-    ``base + _metadata.row_index`` via a broadcast join against the
-    (file → base) manifest map — metadata-sized, one row per file —
-    and materialized files read their physical ``_rid`` column. The DV
-    anti-join runs on the SAME (file, row_index) keys from the same
-    scan, so an id is always computed from the physical position the
-    mask addresses. Raises if any file lacks tracking metadata (it was
-    written by an untracked op — the loud error beats a silent NULL id).
-    """
-    from pyspark.sql import functions as F
-
-    rids = snap.get("rids", {})
-    untracked = [n for n in names if n not in rids]
-    if untracked:
-        raise ValueError(
-            f"{table}: files without row-tracking metadata (a table is "
-            f"tracked only if created with tx_init(table, "
-            f"row_tracking=True)): {sorted(untracked)[:3]}")
-    positional = {n: b for n, b in rids.items()
-                  if n in names and b is not None}
-    materialized = [n for n in names if rids.get(n) is None]
-    chain = snap.get("renames", [])
-    drops = snap.get("drops", [])
-    # always read under the explicit manifest-recorded schema union:
-    # generations may differ by column set (ADD COLUMN), by the
-    # presence of a materialized ``_rid``, by physical name (renames)
-    # or by width (type widening) — the union schema handles all four
-    # with ZERO per-file footer I/O (see _widened_read_schema)
-    rdr = spark.read.schema(_widened_read_schema(table, snap, names))
-    df = rdr.parquet(*(os.path.join(table, n) for n in names))
-    data_cols = [c for c in df.columns if c != _RID]
-    keyed = df.select(
-        "*",
-        F.col("_metadata.file_name").alias("__file"),
-        F.col("_metadata.row_index").alias("__pos"),
-    )
-    if positional:
-        bases = spark.createDataFrame(
-            sorted(positional.items()), schema="__file string, __base bigint")
-        keyed = keyed.join(F.broadcast(bases), "__file", "left")
-        rid = F.col("__base") + F.col("__pos")
-        if materialized:
-            rid = F.when(F.col("__base").isNotNull(), rid) \
-                .otherwise(F.col(_RID).cast("bigint"))
-        keyed = keyed.withColumn(_RID, rid).drop("__base")
-    else:
-        keyed = keyed.withColumn(_RID, F.col(_RID).cast("bigint"))
-    dvs = snap.get("dvs", {})
-    dv_files = sorted({dvs[n] for n in names if n in dvs})
-    if dv_files:
-        mask = spark.read.parquet(
-            *(os.path.join(table, d) for d in dv_files)).select(
-            "file", "pos").distinct()
-        keyed = keyed.join(
-            mask,
-            (keyed["__file"] == mask["file"]) & (keyed["__pos"] == mask["pos"]),
-            "left_anti",
-        )
-    out = keyed.select(*data_cols, _RID)
-    out = _apply_renames(out, chain)
-    present = [c for c in drops if c in out.columns and c != _RID]
-    return out.drop(*present) if present else out
-
-
 def tx_read_tracked(spark: SparkSession, table: str,
                     version: int | None = None) -> DataFrame:
     """Snapshot read exposing the stable ``_rid`` row id (deletion
@@ -2494,7 +2372,7 @@ def tx_read_tracked(spark: SparkSession, table: str,
     snap = tx_snapshot(table, version)
     if not snap["files"]:
         raise ValueError(f"version {snap['version']} of {table} is empty")
-    return _read_tracked_files(spark, table, snap, snap["files"])
+    return _scan(spark, table, snap, snap["files"], row_ids=True)
 
 
 def tx_changes_by_rid(spark: SparkSession, table: str,
@@ -2528,8 +2406,6 @@ def tx_changes_by_rid(spark: SparkSession, table: str,
     conjunction inside the join projection; no collect, no driver
     loops. At 100 TB the cost is the two snapshot scans plus one
     hash join on an 8-byte key."""
-    from pyspark.sql import functions as F
-
     snap_to = tx_snapshot(table, v_to)
     snap_from = tx_snapshot(table, v_from)
     final_chain = snap_to.get("renames", [])
@@ -2538,7 +2414,7 @@ def tx_changes_by_rid(spark: SparkSession, table: str,
     def _side(snap):
         if not snap["files"]:
             return None
-        df = _read_tracked_files(spark, table, snap, snap["files"])
+        df = _scan(spark, table, snap, snap["files"], row_ids=True)
         df = _apply_renames(df, final_chain)
         gone = [c for c in final_drops if c in df.columns and c != _RID]
         return df.drop(*gone) if gone else df
@@ -2654,8 +2530,6 @@ def _apply_generated(df: DataFrame, table: str, gens: dict) -> DataFrame:
     column when absent; when the writer SUPPLIED it, validate equality
     (null-safe) and reject mismatches — Delta's generated-column
     contract. One filter+limit per enforcement, over the write only."""
-    from pyspark.sql import functions as F
-
     if not gens:
         return df
     for col, spec in sorted(gens.items()):

@@ -31,6 +31,7 @@ tests assert streaming == batch).
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 from collections.abc import Iterator
 from contextlib import contextmanager
@@ -46,6 +47,48 @@ from pyspark.sql.types import (
 )
 
 
+def _stage_source(path: str, table: str) -> str:
+    """The symlink dir a file-source stream over ``path`` reads.
+
+    File stream sources want a DIRECTORY (new files arrive over time);
+    the test corpus is a single file (or a directory of parts) — stage
+    it behind a symlink dir. A real deployment points the stream at the
+    landing directory directly. The stage path is DETERMINISTIC per
+    source (not a fresh tempdir): checkpoints record the source path,
+    so restart semantics — rerun against the same checkpoint sees no
+    new files — require the staged dir to be stable across calls.
+
+    A directory source links each parquet part individually (the file
+    stream does NOT descend into a symlinked subdirectory, probed round
+    12, and per-file links are what let maxFilesPerTrigger split
+    batches); a single file gets one link. Both shapes come from ONE
+    wanted set {link name → target}: every symlink not in it, pointing
+    elsewhere or dangling is pruned, so a source that changes shape or
+    is rebuilt at the same path never feeds stale rows (ADVICE r12,
+    r13); entries that are not symlinks are left alone."""
+    import hashlib
+
+    src = os.path.abspath(path)
+    digest = hashlib.md5(src.encode()).hexdigest()[:12]
+    stage = os.path.join(tempfile.gettempdir(), f"{table}_src_{digest}")
+    os.makedirs(stage, exist_ok=True)
+    if os.path.isdir(path):
+        wanted = {p: os.path.join(src, p) for p in os.listdir(path)
+                  if p.endswith(".parquet")}
+    else:
+        wanted = {f"{table}.parquet": src}
+    for existing in os.listdir(stage):
+        lk = os.path.join(stage, existing)
+        if os.path.islink(lk) and (os.readlink(lk) != wanted.get(existing)
+                                   or not os.path.exists(lk)):
+            os.unlink(lk)
+    for name, target in sorted(wanted.items()):
+        link = os.path.join(stage, name)
+        if not os.path.lexists(link):  # exists() is False when dangling
+            os.symlink(target, link)
+    return stage
+
+
 def events_stream(spark: SparkSession, sf_dir: str,
                   max_files_per_trigger: int | None = None) -> DataFrame:
     """File-source stream over the events parquet. Schema is taken from
@@ -56,44 +99,7 @@ def events_stream(spark: SparkSession, sf_dir: str,
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = f"{sf_dir}/events.parquet"
     schema = spark.read.parquet(path).schema
-    # file stream sources want a DIRECTORY (new files arrive over time);
-    # the test corpus is a single file — stage it behind a symlink dir.
-    # A real deployment points this at the landing directory directly.
-    # The stage path is DETERMINISTIC per source (not a fresh tempdir):
-    # checkpoints record the source path, so restart semantics — rerun
-    # against the same checkpoint sees no new files — require the
-    # staged dir to be stable across calls.
-    import hashlib
-
-    digest = hashlib.md5(os.path.abspath(path).encode()).hexdigest()[:12]
-    stage = os.path.join(tempfile.gettempdir(), f"events_src_{digest}")
-    os.makedirs(stage, exist_ok=True)
-    if os.path.isdir(path):
-        # multi-file events source (multi-batch tests): symlink each
-        # parquet part individually — the file stream does NOT descend
-        # into a symlinked subdirectory (probed round 12), and per-file
-        # links are what let maxFilesPerTrigger split batches
-        # prune links whose target is gone (a cleaned-up tmp corpus that
-        # hashes to the same stage dir would otherwise leave dangling or
-        # stale links tripping later reads — ADVICE r12), then (re)link
-        # with lexists: os.path.exists is False for a DANGLING symlink,
-        # so exists-guarded symlink would raise FileExistsError
-        wanted = {p for p in os.listdir(path) if p.endswith(".parquet")}
-        for existing in os.listdir(stage):
-            lk = os.path.join(stage, existing)
-            if existing not in wanted or not os.path.exists(lk):
-                os.unlink(lk)
-        for part in sorted(wanted):
-            link = os.path.join(stage, part)
-            if not os.path.lexists(link):
-                os.symlink(os.path.join(os.path.abspath(path), part),
-                           link)
-    else:
-        link = os.path.join(stage, "events.parquet")
-        if os.path.lexists(link) and not os.path.exists(link):
-            os.unlink(link)  # dangling link from a deleted prior target
-        if not os.path.lexists(link):
-            os.symlink(os.path.abspath(path), link)
+    stage = _stage_source(path, "events")
     reader = spark.readStream.schema(schema).format("parquet")
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
@@ -108,17 +114,14 @@ def events_stream(spark: SparkSession, sf_dir: str,
 # start. For the bounded availableNow runs here (local, sf≤0.1) 32 state
 # stores are pure overhead — measured 5× slower on the stream-stream
 # join. Production picks this proportional to executor count and keeps
-# it stable for the life of the checkpoint; None = don't touch the conf.
-STATE_PARTITIONS: int | None = 8
+# it stable for the life of the checkpoint.
+STATE_PARTITIONS = 8
 
 
 @contextmanager
-def _state_partitions(spark: SparkSession, n: int | None = STATE_PARTITIONS):
-    if n is None:
-        yield
-        return
+def _state_partitions(spark: SparkSession):
     old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    spark.conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
     try:
         yield
     finally:
@@ -162,24 +165,59 @@ def _skip_trailing_no_data_batch(spark: SparkSession):
         spark.conf.set(key, old)
 
 
-def _drain(sdf: DataFrame, checkpoint: str | None = None, mode: str = "append",
-           sink_path: str | None = None) -> None:
+def _drain(sdf: DataFrame, *, mode: str, checkpoint: str | None = None,
+           sink=None) -> None:
+    """THE stream driver — every drain in the package starts and awaits
+    its query here: ``sdf`` runs to completion under
+    ``trigger(availableNow)`` in output ``mode``. ``sink`` is a parquet
+    directory path, a ``foreachBatch`` callable ``(batch_df, batch_id)``
+    or None (noop sink). Without a ``checkpoint`` the drain runs
+    against a fresh ``ckpt_*`` temp dir and removes it afterwards —
+    nothing can restart against it; a caller that restarts (a gate)
+    passes its own checkpoint, which is kept."""
     ckpt = checkpoint or tempfile.mkdtemp(prefix="ckpt_")
     w = (
         sdf.writeStream.outputMode(mode)
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
     )
-    if sink_path:
-        q = w.format("parquet").option("path", sink_path).start()
+    if callable(sink):
+        w = w.foreachBatch(sink)
+    elif sink is not None:
+        w = w.format("parquet").option("path", sink)
     else:
-        q = w.format("noop").start()
-    q.awaitTermination()
+        w = w.format("noop")
+    try:
+        w.start().awaitTermination()
+    finally:
+        if checkpoint is None:
+            shutil.rmtree(ckpt, ignore_errors=True)
+
+
+def _fold_state(path: str, delta: DataFrame, merge) -> None:
+    """Fold one micro-batch into a parquet STATE table: ``merge``
+    reduces the union of the current state at ``path`` (absent before
+    the first batch) and ``delta``; the result is written to
+    ``path.staged`` and swapped in by rename, the previous state parked
+    at ``path.old`` and removed. A crash between the two renames leaves
+    the state recoverable at ``path.old`` (the ``sinks.merge_upsert``
+    contract)."""
+    both = (delta.sparkSession.read.parquet(path).unionByName(delta)
+            if os.path.isdir(path) else delta)
+    staged = path + ".staged"
+    merge(both).write.mode("overwrite").parquet(staged)
+    if os.path.isdir(path):
+        old = path + ".old"
+        os.rename(path, old)
+        os.rename(staged, path)
+        shutil.rmtree(old)
+    else:
+        os.rename(staged, path)
 
 
 def _land_stream(sdf: DataFrame, table: str, ckpt: str, app: str, *,
                  mode: str, n_files: int, shuffle: bool = False,
-                 gate: bool = False) -> None:
+                 gate: bool = False, prepare=None) -> None:
     """Drive ``sdf`` to completion (``availableNow``), landing every
     micro-batch in the tx ``table`` as one exactly-once
     ``tx_append(txn=(app, batchId))``: Structured Streaming replays a
@@ -192,7 +230,9 @@ def _land_stream(sdf: DataFrame, table: str, ckpt: str, app: str, *,
     coalesce — right when the batch's input is reduce-side compute
     (stateful agg / applyInPandasWithState), which coalesce(1) would
     serialize into one task (3.5x on keep-last, round 12); a
-    pass-through projection keeps coalesce.
+    pass-through projection keeps coalesce. ``prepare`` maps each
+    micro-batch to the rows landed (a per-batch aggregate or encode that
+    cannot run on the stream itself).
 
     ``gate=True`` makes exactly-once a GATE, not a claim: restart the
     stream against the same checkpoint (no new files → neither the
@@ -209,27 +249,22 @@ def _land_stream(sdf: DataFrame, table: str, ckpt: str, app: str, *,
     )
 
     def sink(bdf: DataFrame, batch_id: int) -> None:
+        if prepare is not None:
+            bdf = prepare(bdf)
         if mode == "update":
             bdf = bdf.withColumn("batch_id", F.lit(batch_id))
         tx_append(bdf, table, n_files, shuffle=shuffle, txn=(app, batch_id))
-
-    def drain_once() -> None:
-        (sdf.writeStream.outputMode(mode)
-         .option("checkpointLocation", ckpt)
-         .foreachBatch(sink)
-         .trigger(availableNow=True)
-         .start()
-         .awaitTermination())
 
     def state() -> tuple:
         snap = tx_snapshot(table)
         return snap["version"], snap.get("row_hwm")
 
-    drain_once()
+    _drain(sdf, mode=mode, checkpoint=ckpt, sink=sink)
     if not gate:
         return
     before = state()
-    drain_once()  # restart, same checkpoint: must commit nothing
+    # restart, same checkpoint: must commit nothing
+    _drain(sdf, mode=mode, checkpoint=ckpt, sink=sink)
     if state() != before:
         raise AssertionError(
             "checkpoint restart re-committed a batch or burned id range")
@@ -397,14 +432,7 @@ def run_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # first-seen rows emit in their data batch; the watermark only
     # evicts dedup state — the trailing no-data batch emits nothing
     with _state_partitions(spark), _skip_trailing_no_data_batch(spark):
-        q = (
-            agg.writeStream.outputMode("update")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-            .foreachBatch(sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        _drain(agg, mode="update", sink=sink)
     return spark.read.parquet(sink_dir + "/counts")
 
 
@@ -449,7 +477,7 @@ def run_stream_stream_join(spark: SparkSession, sf_dir: str,
     # watermark only bounds state — the trailing no-data batch emits
     # nothing (the left-outer twin NEEDS it and must not skip)
     with _state_partitions(spark), _skip_trailing_no_data_batch(spark):
-        _drain(joined, mode="append", sink_path=sink_dir)
+        _drain(joined, mode="append", sink=sink_dir)
     return spark.read.parquet(sink_dir)
 
 
@@ -537,7 +565,7 @@ def run_session_windows(spark: SparkSession, sf_dir: str,
         )
     )
     with _state_partitions(spark):
-        _drain(agg, mode="append", sink_path=sink_dir)
+        _drain(agg, mode="append", sink=sink_dir)
     return spark.read.parquet(sink_dir)
 
 
@@ -669,14 +697,7 @@ def run_streaming_debounce(spark: SparkSession, sf_dir: str,
                      cache_updates=True)
 
     with _state_partitions(spark):
-        q = (
-            out.writeStream.outputMode("update")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-            .foreachBatch(sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        _drain(out, mode="update", sink=sink)
     per_key = spark.read.parquet(sink_dir + "/keys")
     return per_key.groupBy("event_type").agg(
         F.sum(F.col("n_kept") + F.col("n_debounced")).cast("bigint").alias("n_total"),
@@ -790,44 +811,14 @@ def run_streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        import shutil
-
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        batch_state = _flatten(batch_df.groupBy("user_id").agg(_winner()))
-        if os.path.isdir(state_path):
-            cur = s.read.parquet(state_path)
-            both = cur.unionByName(batch_state)
-        else:
-            both = batch_state
-        merged = _flatten(
-            both.select(
-                "user_id",
-                F.struct("ts_us", "event_id", F.col("op").alias("__op"),
-                         F.col("value").alias("__value"),
-                         F.col("event_type").alias("__etype")).alias("__s"),
-            ).groupBy("user_id").agg(F.max("__s").alias("w"))
-        )
-        staged = state_path + ".staged"
-        merged.write.mode("overwrite").parquet(staged)
-        if os.path.isdir(state_path):
-            old = state_path + ".old"
-            os.rename(state_path, old)
-            os.rename(staged, state_path)
-            shutil.rmtree(old)
-        else:
-            os.rename(staged, state_path)
+        # the state rows carry the log's column names, so the batch
+        # folds in raw: one per-key max over state ∪ batch
+        if not batch_df.isEmpty():
+            _fold_state(state_path, batch_df, lambda both: _flatten(
+                both.groupBy("user_id").agg(_winner())))
 
     with _state_partitions(spark):
-        q = (
-            log.writeStream.outputMode("append")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-            .foreachBatch(sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        _drain(log, mode="append", sink=sink)
     if not os.path.isdir(state_path):
         # empty input: zero batches reached the sink, no state written
         return spark.createDataFrame([], StructType([
@@ -894,7 +885,7 @@ def run_stream_stream_left_join(spark: SparkSession, sf_dir: str,
         F.unix_micros(F.col("click_time")).alias("click_ts_us"),
     )
     with _state_partitions(spark):
-        _drain(joined, mode="append", sink_path=sink_dir)
+        _drain(joined, mode="append", sink=sink_dir)
     rows = spark.read.parquet(sink_dir)
     per_click = rows.groupBy("user_id", "click_id").agg(
         F.max(F.col("purchase_id").isNotNull().cast("int")).alias("attributed")
@@ -927,7 +918,6 @@ def run_streaming_tx_sink(spark: SparkSession, sf_dir: str,
     8-byte-scale manifest link; commit cost is independent of table
     size. This is the landing-zone pattern the compaction +
     OPTIMIZE ZORDER maintenance jobs then operate on."""
-    import shutil
 
     from pulsar_project_spark.sources.txlog import (
         tx_init,
@@ -987,8 +977,6 @@ def run_streaming_retractable_agg(spark: SparkSession,
     (``run_streaming_tx_sink``) — additive merges alone are
     deliberately NOT idempotent, and that contrast is the point of the
     two queries being separate."""
-    import shutil
-
     state_dir = tempfile.mkdtemp(prefix="retractstate_")
     state_path = os.path.join(state_dir, "state")
     ev = events_stream(spark, sf_dir)
@@ -1007,38 +995,16 @@ def run_streaming_retractable_agg(spark: SparkSession,
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        s = batch_df.sparkSession
         delta = batch_df.groupBy("user_id").agg(
             F.sum("w").alias("n_events"),
             F.sum(F.col("w") * F.col("c")).alias("sum_cents"),
         )
-        if os.path.isdir(state_path):
-            both = s.read.parquet(state_path).unionByName(delta)
-        else:
-            both = delta
-        merged = both.groupBy("user_id").agg(
-            F.sum("n_events").alias("n_events"),
-            F.sum("sum_cents").alias("sum_cents"),
-        )
-        staged = state_path + ".staged"
-        merged.write.mode("overwrite").parquet(staged)
-        if os.path.isdir(state_path):
-            old = state_path + ".old"
-            os.rename(state_path, old)
-            os.rename(staged, state_path)
-            shutil.rmtree(old)
-        else:
-            os.rename(staged, state_path)
+        _fold_state(state_path, delta, lambda both: both.groupBy(
+            "user_id").agg(F.sum("n_events").alias("n_events"),
+                           F.sum("sum_cents").alias("sum_cents")))
 
     with _state_partitions(spark):
-        q = (
-            log.writeStream.outputMode("append")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-            .foreachBatch(sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        _drain(log, mode="append", sink=sink)
     if not os.path.isdir(state_path):
         from pyspark.sql.types import (LongType, StructField, StructType)
 
@@ -1054,20 +1020,13 @@ def run_streaming_retractable_agg(spark: SparkSession,
 
 def table_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """File-source stream over any corpus table (the events_stream
-    staging pattern, generalized): schema from a batch peek, single
-    file staged behind a deterministic symlink dir so checkpoints
-    survive re-runs."""
-    import hashlib
-
+    staging pattern, generalized): schema from a batch peek, the table
+    staged behind a deterministic symlink dir (``_stage_source``) so
+    checkpoints survive re-runs."""
     path = f"{sf_dir}/{table}.parquet"
     schema = spark.read.parquet(path).schema
-    digest = hashlib.md5(os.path.abspath(path).encode()).hexdigest()[:12]
-    stage = os.path.join(tempfile.gettempdir(), f"{table}_src_{digest}")
-    os.makedirs(stage, exist_ok=True)
-    link = os.path.join(stage, f"{table}.parquet")
-    if not os.path.exists(link):
-        os.symlink(os.path.abspath(path), link)
-    return spark.readStream.schema(schema).format("parquet").load(stage)
+    return spark.readStream.schema(schema).format("parquet").load(
+        _stage_source(path, table))
 
 
 def run_streaming_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1083,8 +1042,6 @@ def run_streaming_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_streaming.py). The state is the exact value histogram —
     the honest cost of EXACT drift monitoring; a production monitor at
     100 TB bins the state adaptively and accepts resolution loss."""
-    import shutil
-
     from pyspark.sql.window import Window
 
     state_dir = tempfile.mkdtemp(prefix="ksstate_")
@@ -1100,34 +1057,13 @@ def run_streaming_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        s = batch_df.sparkSession
         delta = batch_df.groupBy("cents").agg(
             F.sum("ia").alias("da"), F.sum("ib").alias("db"))
-        if os.path.isdir(state_path):
-            both = s.read.parquet(state_path).unionByName(delta)
-        else:
-            both = delta
-        merged = both.groupBy("cents").agg(
-            F.sum("da").alias("da"), F.sum("db").alias("db"))
-        staged = state_path + ".staged"
-        merged.write.mode("overwrite").parquet(staged)
-        if os.path.isdir(state_path):
-            old = state_path + ".old"
-            os.rename(state_path, old)
-            os.rename(staged, state_path)
-            shutil.rmtree(old)
-        else:
-            os.rename(staged, state_path)
+        _fold_state(state_path, delta, lambda both: both.groupBy(
+            "cents").agg(F.sum("da").alias("da"), F.sum("db").alias("db")))
 
     with _state_partitions(spark):
-        q = (
-            log.writeStream.outputMode("append")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-            .foreachBatch(sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        _drain(log, mode="append", sink=sink)
     from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
     empty = StructType([
@@ -1183,8 +1119,6 @@ def run_streaming_cms_heavy_hitters(spark: SparkSession,
     pinned in tests/test_streaming.py). At 100 TB the streaming state
     is ~100 KB of counters plus the per-key counts — the sketch is the
     part that stays small when the key space explodes."""
-    import shutil
-
     from pulsar_project_spark.operators.sketches import (
         cms_build,
         cms_estimate,
@@ -1196,41 +1130,20 @@ def run_streaming_cms_heavy_hitters(spark: SparkSession,
     ev = events_stream(spark, sf_dir).filter(
         F.col("user_id").isNotNull()).select("user_id")
 
-    def _fold(s, path, delta, keys, cnt_col):
-        if os.path.isdir(path):
-            both = s.read.parquet(path).unionByName(delta)
-        else:
-            both = delta
-        merged = both.groupBy(*keys).agg(F.sum(cnt_col).alias(cnt_col))
-        staged = path + ".staged"
-        merged.write.mode("overwrite").parquet(staged)
-        if os.path.isdir(path):
-            old = path + ".old"
-            os.rename(path, old)
-            os.rename(staged, path)
-            shutil.rmtree(old)
-        else:
-            os.rename(staged, path)
+    def _add(keys, cnt_col):
+        return lambda both: both.groupBy(*keys).agg(
+            F.sum(cnt_col).alias(cnt_col))
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        s = batch_df.sparkSession
-        _fold(s, cms_path, cms_build(batch_df, "user_id"),
-              ["depth", "pos"], "cnt")
-        _fold(s, exact_path,
-              batch_df.groupBy("user_id").agg(F.count("*").alias("exact_n")),
-              ["user_id"], "exact_n")
+        _fold_state(cms_path, cms_build(batch_df, "user_id"),
+                    _add(["depth", "pos"], "cnt"))
+        _fold_state(exact_path, batch_df.groupBy("user_id").agg(
+            F.count("*").alias("exact_n")), _add(["user_id"], "exact_n"))
 
     with _state_partitions(spark):
-        q = (
-            ev.writeStream.outputMode("append")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-            .foreachBatch(sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        _drain(ev, mode="append", sink=sink)
     from pyspark.sql.types import LongType, StructField, StructType
 
     if not os.path.isdir(exact_path):
@@ -1259,8 +1172,6 @@ def run_streaming_lc_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_streaming.py). The bitmap is the piece that stays
     ~1 KB/group at 100 TB; the exact side exists only because the twin
     reports exact-vs-sketch side by side."""
-    import shutil
-
     from pulsar_project_spark.operators.sketches import lc_build, lc_set_bits
 
     state_dir = tempfile.mkdtemp(prefix="lcstate_")
@@ -1270,45 +1181,16 @@ def run_streaming_lc_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type").isNotNull() & F.col("user_id").isNotNull()
     ).select("event_type", "user_id")
 
-    def _swap(df: DataFrame, path: str) -> None:
-        staged = path + ".staged"
-        df.write.mode("overwrite").parquet(staged)
-        if os.path.isdir(path):
-            old = path + ".old"
-            os.rename(path, old)
-            os.rename(staged, path)
-            shutil.rmtree(old)
-        else:
-            os.rename(staged, path)
-
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        s = batch_df.sparkSession
-        delta_bm = lc_build(batch_df, "event_type", "user_id")
-        if os.path.isdir(bm_path):
-            both = s.read.parquet(bm_path).unionByName(delta_bm)
-        else:
-            both = delta_bm
-        merged = both.groupBy("event_type", "word_idx").agg(
-            F.expr("bit_or(bits)").alias("bits"))
-        _swap(merged, bm_path)
-        delta_seen = batch_df.distinct()
-        if os.path.isdir(seen_path):
-            seen = s.read.parquet(seen_path).unionByName(delta_seen).distinct()
-        else:
-            seen = delta_seen
-        _swap(seen, seen_path)
+        _fold_state(bm_path, lc_build(batch_df, "event_type", "user_id"),
+                    lambda both: both.groupBy("event_type", "word_idx").agg(
+                        F.expr("bit_or(bits)").alias("bits")))
+        _fold_state(seen_path, batch_df, lambda both: both.distinct())
 
     with _state_partitions(spark):
-        q = (
-            ev.writeStream.outputMode("append")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-            .foreachBatch(sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        _drain(ev, mode="append", sink=sink)
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
     if not os.path.isdir(bm_path):
@@ -1323,6 +1205,15 @@ def run_streaming_lc_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_exact_distinct"))
     return exact.join(setb, "event_type").select(
         "event_type", "n_exact_distinct", "n_set_bits", "m_bits")
+
+
+def _net_changes(bdf: DataFrame) -> DataFrame:
+    """One change-feed micro-batch netted per commit: the data columns
+    plus ``_net`` (summed weight), zero-weight rows dropped."""
+    data_cols = [c for c in bdf.columns if c not in ("_commit_version", "_w")]
+    return (bdf.groupBy("_commit_version", *data_cols)
+            .agg(F.sum("_w").alias("_net"))
+            .filter(F.col("_net") != 0))
 
 
 def run_streaming_tx_change_feed(spark: SparkSession, sf_dir: str,
@@ -1344,14 +1235,12 @@ def run_streaming_tx_change_feed(spark: SparkSession, sf_dir: str,
     read aggregates the landed partials; equality with the
     oracle-backed batch twin is pinned in tests/test_streaming.py,
     closing the chain stream-feed == batch-feed == DuckDB."""
-    import shutil
 
     from pulsar_project_spark.queries.io_ops import _build_cdf_table
     from pulsar_project_spark.sources.cdf_stream import (
         TxChangeFeedDataSource,
     )
     from pulsar_project_spark.sources.txlog import (
-        tx_append,
         tx_init,
         tx_read,
         tx_snapshot,
@@ -1378,15 +1267,9 @@ def run_streaming_tx_change_feed(spark: SparkSession, sf_dir: str,
         .load()
     )
 
-    def sink(bdf: DataFrame, batch_id: int) -> None:
-        data_cols = [c for c in bdf.columns
-                     if c not in ("_commit_version", "_w")]
-        net = (
-            bdf.groupBy("_commit_version", *data_cols)
-            .agg(F.sum("_w").alias("_net"))
-            .filter(F.col("_net") != 0)
-        )
-        partial = net.groupBy(
+    def partial(bdf: DataFrame) -> DataFrame:
+        net = _net_changes(bdf)
+        return net.groupBy(
             F.when(F.col("_net") > 0, F.lit("insert"))
             .otherwise(F.lit("delete")).alias("change_type"),
             "event_type",
@@ -1395,27 +1278,12 @@ def run_streaming_tx_change_feed(spark: SparkSession, sf_dir: str,
             F.sum(F.abs(F.col("_net")) * F.col("value_cents"))
             .cast("bigint").alias("total_cents"),
         )
-        # coalesce (default) is right here: ``partial`` is a tiny
-        # grouped-agg result — only the trivial reduce side merges into
-        # one task; the feed scan + partial agg stay map-side parallel
-        tx_append(partial, state, 1, txn=("cdf_fold", batch_id))
 
-    def drain_once() -> None:
-        q = (
-            feed.writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    drain_once()
-    if gate:
-        v_after_drain = tx_snapshot(state)["version"]
-        drain_once()  # restart, same checkpoint: zero new commits
-        if tx_snapshot(state)["version"] != v_after_drain:
-            raise AssertionError("restart drain committed new versions")
+    # coalesce (no shuffle) is right here: ``partial`` is a tiny
+    # grouped-agg result — only the trivial reduce side merges into one
+    # task; the feed scan + partial agg stay map-side parallel
+    _land_stream(feed, state, ckpt, "cdf_fold", mode="append", n_files=1,
+                 gate=gate, prepare=partial)
     if not tx_snapshot(state)["files"]:
         from pyspark.sql.types import (
             LongType, StringType, StructField, StructType,
@@ -1446,7 +1314,6 @@ def _build_mv_table(spark: SparkSession, sf_dir: str) -> str:
     (under the new name natively), and a COW UPDATE that doubles a key
     range (rewriting pre-rename files through the logical schema, so
     the feed crosses a column-mapping boundary)."""
-    import shutil
 
     from pulsar_project_spark.queries.io_ops import _rt_path
     from pulsar_project_spark.sources.tables import load_events
@@ -1521,13 +1388,11 @@ def run_streaming_tx_mv(spark: SparkSession, sf_dir: str,
     table accumulates one tiny partial file per batch and compaction
     folds them — at 100 TB this replaces the full-table rescan per
     refresh that the reference's reload loop (memory.py:63-91) pays."""
-    import shutil
 
     from pulsar_project_spark.sources.cdf_stream import (
         TxChangeFeedDataSource,
     )
     from pulsar_project_spark.sources.txlog import (
-        tx_append,
         tx_init,
         tx_read,
         tx_snapshot,
@@ -1554,38 +1419,16 @@ def run_streaming_tx_mv(spark: SparkSession, sf_dir: str,
         .load()
     )
 
-    def sink(bdf: DataFrame, batch_id: int) -> None:
-        data_cols = [c for c in bdf.columns
-                     if c not in ("_commit_version", "_w")]
-        net = (
-            bdf.groupBy("_commit_version", *data_cols)
-            .agg(F.sum("_w").alias("_net"))
-            .filter(F.col("_net") != 0)
-        )
-        partial = net.groupBy("event_type").agg(
+    def partial(bdf: DataFrame) -> DataFrame:
+        return _net_changes(bdf).groupBy("event_type").agg(
             F.sum("_net").cast("bigint").alias("n"),
             F.sum(F.col("_net") * F.col("val_cents")).cast("bigint")
             .alias("cents"),
         )
-        # coalesce (default): tiny grouped-agg partial, trivial reduce
-        tx_append(partial, state, 1, txn=("cdf_mv", batch_id))
 
-    def drain_once() -> None:
-        q = (
-            feed.writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    drain_once()
-    if gate:
-        v_after_drain = tx_snapshot(state)["version"]
-        drain_once()  # restart, same checkpoint: zero new commits
-        if tx_snapshot(state)["version"] != v_after_drain:
-            raise AssertionError("restart drain committed new versions")
+    # coalesce (no shuffle): tiny grouped-agg partial, trivial reduce
+    _land_stream(feed, state, ckpt, "cdf_mv", mode="append", n_files=1,
+                 gate=gate, prepare=partial)
     if not tx_snapshot(state)["files"]:
         from pyspark.sql.types import (
             LongType, StringType, StructField, StructType,
@@ -1622,7 +1465,6 @@ def run_streaming_tx_tracked_sink(spark: SparkSession, sf_dir: str,
     above keeps exactly-once hash-checkable without them. (At extreme scale the n^2/2 sum would outgrow int64
     around 4e9 rows — production would fold ids modulo a prime; the
     census documents the exact form the oracle replays.)"""
-    import shutil
 
     from pulsar_project_spark.sources.txlog import (
         tx_init,
@@ -1704,7 +1546,6 @@ def run_streaming_ann_ingest(spark: SparkSession, sf_dir: str,
     leaves open: there the feed is batch `tx_table_changes`; here it
     is a live Structured Streaming ingestion."""
     import hashlib
-    import shutil
 
     from pulsar_project_spark.operators.kmeans import (
         kmeans_assign_to,
@@ -1716,7 +1557,6 @@ def run_streaming_ann_ingest(spark: SparkSession, sf_dir: str,
         tx_append,
         tx_init,
         tx_read,
-        tx_snapshot,
     )
 
     emb = load_table(spark, sf_dir, "embeddings").filter(
@@ -1762,45 +1602,24 @@ def run_streaming_ann_ingest(spark: SparkSession, sf_dir: str,
         F.col("embedding").isNotNull() & F.col("vec_id").isNotNull()
     ).select("vec_id", "embedding")
 
-    app = "ann_ingest"
-
-    def sink(bdf: DataFrame, batch_id: int) -> None:
+    def encode(bdf: DataFrame) -> DataFrame:
         # ONE map-side pass (round 12): the frozen-quantizer assignment
         # is a broadcast argmin that carries `embedding` through, and
         # pq_encode rides the same projection carrying `label` — the
         # old assign⋈encode join shuffled every micro-batch (and needed
-        # a persist because bdf fed two branches); shuffle=True so the
-        # single-file landing doesn't narrow the encode into one task
-        part = pq_encode(
+        # a persist because bdf fed two branches)
+        return pq_encode(
             kmeans_assign_to(bdf, frozen, keep=("embedding",))
             .select("vec_id", "embedding", "label"),
             carry=("label",),
         ).select("vec_id", "label", "subspace", "code")
-        tx_append(part, idx_tbl, 1, shuffle=True, txn=(app, batch_id))
 
-    def drain_once() -> None:
-        q = (
-            vec_stream.writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
+    # shuffle=True so the single-file landing doesn't narrow the encode
+    # into one task
     with _state_partitions(spark):
-        drain_once()
-        if gate:
-            v = tx_snapshot(idx_tbl)["version"]
-            drain_once()  # restart, same checkpoint: must commit nothing
-            if tx_snapshot(idx_tbl)["version"] != v:
-                raise AssertionError(
-                    "checkpoint restart re-committed a batch")
-    if gate and tx_snapshot(idx_tbl)["files"]:
-        v = tx_snapshot(idx_tbl)["version"]
-        tx_append(tx_read(spark, idx_tbl), idx_tbl, 1, txn=(app, 0))
-        if tx_snapshot(idx_tbl)["version"] != v:
-            raise AssertionError("replayed batch 0 was not deduplicated")
+        _land_stream(vec_stream, idx_tbl, ckpt, "ann_ingest",
+                     mode="append", n_files=1, shuffle=True, gate=gate,
+                     prepare=encode)
 
     return (tx_read(spark, idx_tbl)
             .groupBy("label", "subspace")

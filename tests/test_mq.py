@@ -64,3 +64,19 @@ def test_compact_topic_reduces_files_preserves_rows(spark):
     assert after_files < before_files
     assert after.count() == before_rows
     assert after_files == 1
+
+
+def test_write_stream_drains_a_stream_into_a_topic(spark):
+    from pulsar_project_spark.sources.mq import (
+        DirectoryQueue, encode_events_as_messages,
+    )
+    from pulsar_project_spark.sources.tables import load_events
+
+    q = DirectoryQueue()
+    q.produce(encode_events_as_messages(
+        load_events(spark, SF_SMOKE).limit(50)), "in")
+    q.write_stream(q.read_stream(spark, "in"), "out")
+    got = q.read_batch(spark, "out")
+    assert got.count() == q.read_batch(spark, "in").count()
+    assert {r.topic for r in got.select("topic").distinct().collect()} \
+        == {"out"}

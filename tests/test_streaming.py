@@ -664,6 +664,81 @@ def test_streaming_dedup_collapses_null_event_time_rows(spark):
     assert out.filter("ts_us IS NULL").count() == 1
 
 
+def test_drain_without_checkpoint_removes_its_own(spark, tmp_path):
+    """A drain that creates its checkpoint removes it; a caller-supplied
+    checkpoint (a restart gate's) is kept."""
+    import glob
+    import os
+    import tempfile
+
+    from pulsar_project_spark.streaming.pipeline import _drain
+
+    src = str(tmp_path / "src")
+    spark.range(10).write.parquet(src)
+    sdf = spark.readStream.schema("id long").parquet(src)
+    pattern = os.path.join(tempfile.gettempdir(), "ckpt_*")
+    before = set(glob.glob(pattern))
+    _drain(sdf, mode="append")
+    assert set(glob.glob(pattern)) <= before
+    kept = str(tmp_path / "ckpt")
+    _drain(sdf, mode="append", checkpoint=kept)
+    assert os.path.isdir(os.path.join(kept, "offsets"))
+
+
+def test_events_stream_stage_follows_a_source_switching_shape(spark,
+                                                             tmp_path):
+    """One stage dir reused across a dir → file → dir change of the
+    same events path: each stream sees exactly the current rows, the
+    stage keeps no link left over from the previous shape, and a
+    non-link entry in the stage is left alone instead of crashing the
+    prune."""
+    import glob
+    import hashlib
+    import os
+    import shutil
+    import tempfile
+
+    from pulsar_project_spark.streaming.pipeline import (
+        _drain,
+        events_stream,
+    )
+
+    sf = str(tmp_path / "sf")
+    path = os.path.join(sf, "events.parquet")
+    os.makedirs(sf)
+    stage = os.path.join(tempfile.gettempdir(), "events_src_" + hashlib.md5(
+        os.path.abspath(path).encode()).hexdigest()[:12])
+
+    def rows(lo, hi):
+        return spark.range(lo, hi).select(
+            F.col("id").alias("event_id"),
+            F.timestamp_micros(F.col("id")).alias("ts"),
+            F.col("id").alias("user_id"), F.lit("click").alias("event_type"),
+            F.lit(1.0).alias("value"), F.lit("{}").alias("props"))
+
+    def seen():
+        out = str(tmp_path / f"out{len(glob.glob(str(tmp_path / 'out*')))}")
+        _drain(events_stream(spark, sf), mode="append", sink=out)
+        return sorted(r.event_id for r in spark.read.parquet(out).collect())
+
+    try:
+        rows(0, 6).repartition(3).write.parquet(path)       # dir, 3 parts
+        assert seen() == list(range(0, 6))
+        shutil.rmtree(path)
+        tmp = str(tmp_path / "one")
+        rows(10, 14).coalesce(1).write.parquet(tmp)         # single file
+        shutil.move(glob.glob(os.path.join(tmp, "part-*.parquet"))[0], path)
+        assert seen() == list(range(10, 14))
+        assert os.listdir(stage) == ["events.parquet"]
+        os.makedirs(os.path.join(stage, "_not_a_link"))
+        os.unlink(path)
+        rows(20, 22).repartition(2).write.parquet(path)     # dir again
+        assert seen() == list(range(20, 22))
+        assert os.path.isdir(os.path.join(stage, "_not_a_link"))
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
+
+
 @pytest.mark.gate  # exactly-once/restart certification arm
 def test_streaming_debounce_multi_batch_state(spark, tmp_path):
     """Round-12 user-keyed fold: per-type chains packed into ONE JSON

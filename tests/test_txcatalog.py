@@ -327,3 +327,27 @@ def test_catalog_read_applies_dvs_and_column_mapping(spark, tmp_path):
         "catalog reads must resolve the rename chain"
     assert df.agg({"value": "sum"}).first()[0] == sum(
         10 * i for i in range(10, 100))
+
+
+def test_move_keeps_row_ids_on_tracked_tables(spark, tmp_path):
+    """On row-tracked tables a move keeps the survivors' ids in the
+    source and lands the movers in the destination as inserts with
+    fresh ids from its ``row_hwm``; both tables stay readable through
+    the identity view."""
+    from pulsar_project_spark.sources.txlog import tx_read_tracked
+
+    hot, cold, cat = (str(tmp_path / n) for n in ("hot", "cold", "_cat"))
+    tx_init(hot, row_tracking=True)
+    tx_init(cold, row_tracking=True)
+    tx_append(spark.range(20).select(F.col("id").alias("k")), hot, n_files=2)
+    before = {r.k: r._rid for r in tx_read_tracked(spark, hot).collect()}
+    catalog_init(cat, {"hot": hot, "cold": cold})
+    catalog_move(spark, cat, "hot", "cold", F.col("k") < 5)
+    pins = catalog_snapshot(cat)["tables"]
+    src = tx_read_tracked(spark, hot, pins["hot"][1]).collect()
+    dst = tx_read_tracked(spark, cold, pins["cold"][1]).collect()
+    assert {r.k: r._rid for r in src} == {
+        k: rid for k, rid in before.items() if k >= 5}
+    assert sorted(r.k for r in dst) == list(range(5))
+    assert sorted(r._rid for r in dst) == list(range(5))
+    assert tx_snapshot(cold, pins["cold"][1])["row_hwm"] == 5

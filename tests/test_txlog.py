@@ -436,7 +436,6 @@ def test_vacuum_keeps_files_of_newer_manifests(spark, table):
 
 def test_as_of_timestamp_resolution_and_edges(spark, table):
     from pulsar_project_spark.sources.txlog import (
-        tx_read_as_of_timestamp,
         tx_version_as_of_timestamp,
     )
 
@@ -455,7 +454,7 @@ def test_as_of_timestamp_resolution_and_edges(spark, table):
     assert tx_version_as_of_timestamp(table, between) == 1
     # far future resolves to latest
     assert tx_version_as_of_timestamp(table, ts2 + 10**12) == 2
-    df = tx_read_as_of_timestamp(spark, table, ts1)
+    df = tx_read(spark, table, tx_version_as_of_timestamp(table, ts1))
     assert df.count() == 40
 
 
@@ -662,13 +661,29 @@ def test_schema_evolution_merged_read_with_dvs(spark, table):
     tx_append(gen1, table, n_files=2)
     tx_append(gen2, table, n_files=1)
     tx_delete_range_dv(spark, table, "id", 40, 59)  # spans the boundary
-    back = tx_read(spark, table, merge_schema=True)
+    back = tx_read(spark, table)
     rows = {r.id: (r.v, r.extra) for r in back.collect()}
     survivors = set(range(40)) | set(range(60, 80))
     assert set(rows) == survivors
     for i in survivors:
         assert rows[i][0] == 3 * i
         assert rows[i][1] == (7 * i if i >= 60 else None)
+
+
+def test_read_carries_columns_added_by_a_later_generation(spark, table):
+    """A plain ``tx_read`` reads under the snapshot's recorded schema
+    union: generation {k} then generation {k, extra} reads as both
+    columns, the older rows NULL in ``extra`` — whichever file Spark
+    would have inferred a schema from."""
+    tx_append(spark.range(0, 5).selectExpr("id AS k"), table, n_files=1)
+    tx_append(spark.range(5, 8).selectExpr("id AS k", "id * 2 AS extra"),
+              table, n_files=1)
+    back = tx_read(spark, table)
+    assert sorted(back.columns) == ["extra", "k"]
+    assert {(r.k, r.extra) for r in back.collect()} == (
+        {(k, None) for k in range(5)} | {(k, 2 * k) for k in range(5, 8)})
+    # time travel keeps each snapshot's own schema
+    assert tx_read(spark, table, 1).columns == ["k"]
 
 
 def test_update_rewrites_only_overlapping_files(spark, table):
@@ -1614,6 +1629,8 @@ def test_reorg_purge_retires_all_mapping_debt(spark, table):
     # clean (wide, un-DV'd) files carried by name
     assert set(clean_before) <= set(snap["files"])
     got = tx_read(spark, table)
+    # retired physical names (a, scratch) do not read back as columns
+    assert sorted(got.columns) == ["b", "k"]
     assert got.count() == 17  # DV'd rows 0..2 purged with their mask
     assert got.agg({"b": "sum"}).first()[0] == sum(range(3, 20))
     # pre-reorg time travel still reads under the historical mapping
